@@ -397,10 +397,13 @@ def main() -> None:
     # the JSON line and left it unparseable.  Emit the line COMPACT
     # (no separator whitespace) and make it the LAST stdout bytes of
     # the process — spark.stop() runs first so no shutdown output can
-    # land after it and push the line's head out of a byte-capped tail.
-    spark.stop()
-    sys.stdout.flush()
-    print(json.dumps(out, separators=(",", ":")), flush=True)
+    # land after it and push the line's head out of a byte-capped tail;
+    # the finally keeps the line even when the stop itself fails.
+    try:
+        spark.stop()
+    finally:
+        sys.stdout.flush()
+        print(json.dumps(out, separators=(",", ":")), flush=True)
 
 
 if __name__ == "__main__":

@@ -533,6 +533,59 @@ class TestStdioServe:
         assert len(resp["data"]["daily"]["time"]) == 2
         assert set(resp["data"]["daily"]) == {"time", "precipitation_sum"}
 
+    @staticmethod
+    def _jobs_in_group(spark, group, request):
+        """Serve ``request`` under job group ``group``; return the
+        envelope and the ids of the Spark jobs it ran."""
+        from weather_data_ingestion_service_spark.api.serve import handle_request
+
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "test_api_wrappers")
+        try:
+            resp = handle_request(spark, request)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return resp, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    @pytest.mark.parametrize(
+        "params,unknown",
+        [
+            ({"variables": "temperature_2m,not_a_variable"},
+             ["not_a_variable"]),
+            ({"granularity": 1440, "variables": "temperature_2m"},
+             ["temperature_2m"]),
+            ({"daily_variables": "precipitation_sum,not_a_daily"},
+             ["not_a_daily"]),
+        ],
+        ids=["unknown_hourly", "hourly_at_daily", "unknown_mixed_daily"],
+    )
+    def test_unknown_variables_error_before_any_job(self, spark, params, unknown):
+        """Invalid variable names are an error envelope — never an
+        exception out of handle_request, never silently dropped — and
+        are rejected before geocoding, so no Spark job runs."""
+        resp, jobs = self._jobs_in_group(
+            spark,
+            "wds-test-unknown-variables",
+            {"tool": "get_forecast",
+             "params": {"place": "Prague, CZ", "forecast_days": 2, **params}},
+        )
+        assert resp == {"status": "error",
+                        "message": f"unknown variables: {unknown}"}
+        assert jobs == []
+
+    def test_valid_request_jobs_are_seen_by_its_group(self, spark):
+        """Control for the no-job assertion above: the same job-group
+        probe does see a valid request's jobs."""
+        resp, jobs = self._jobs_in_group(
+            spark,
+            "wds-test-valid-variables",
+            {"tool": "get_forecast",
+             "params": {"place": "Prague, CZ", "forecast_days": 2,
+                        "variables": "temperature_2m"}},
+        )
+        assert resp["status"] == "success"
+        assert jobs
+
     def test_errors_are_values_not_exceptions(self, spark):
         from weather_data_ingestion_service_spark.api.serve import handle_request
 

@@ -3559,6 +3559,43 @@ class TestRound10Ops:
         finally:
             shutil.rmtree(path, ignore_errors=True)
 
+    @pytest.mark.parametrize("bad", [None, [0.5] * 63], ids=["null", "len63"])
+    @pytest.mark.parametrize("kernel", ["ivfpq_encode_codes", "_encode_refined_wide"])
+    def test_encode_kernels_reject_bad_vectors(self, spark, kernel, bad):
+        """A NULL or wrong-length vector fails with a ValueError naming
+        the kernel and the expected dim — not numpy's opaque reshape
+        error."""
+        import numpy as np
+
+        from weather_data_ingestion_service_spark.ext import simsearch
+        from weather_data_ingestion_service_spark.io import local_frame
+
+        good = [0.25] * 64
+        if kernel == "ivfpq_encode_codes":
+            corpus = spark.createDataFrame(
+                [(1, good), (2, bad)], "vec_id long, embedding array<float>"
+            )
+            cent = local_frame(
+                spark, [(1, good), (2, [-0.25] * 64)],
+                "cid long, ce array<float>",
+            )
+            out = simsearch.ivfpq_encode_codes(corpus, cent=cent)
+        else:
+            to_q = (lambda v: None if v is None else [int(x * 256) for x in v])
+            q256 = spark.createDataFrame(
+                [(1, to_q(good), 1.0), (2, to_q(bad), 1.0)],
+                "match_id long, q array<long>, scale double",
+            )
+            out = simsearch._encode_refined_wide(
+                q256,
+                np.zeros((2, 64), dtype=np.int64),
+                [np.zeros((4, 8), dtype=np.int64)] * 8,
+                8,
+                8,
+            )
+        with pytest.raises(Exception, match=rf"{kernel}: .*expected dim=64"):
+            out.collect()
+
     def test_ivfpq_codes_are_small_ints_per_vector(self, spark, sf_dir):
         """The persisted-index form: one row per corpus vector, the
         coarse id plus m integer codebook ids, every code a member of

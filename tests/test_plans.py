@@ -411,18 +411,21 @@ def test_nearest_gridpoint_partial_aggregates(spark, sf_dir):
     assert "Window" not in plan
 
 
-def test_md5_ann_codebooks_broadcast(spark, sf_dir):
-    """The IVF/PQ md5 twins' codebooks (16 vectors) must reach the
-    corpus-side scan as broadcasts — a shuffled codebook join would be
-    the wrong plan at any scale.  The round-9 compositions (IVF-PQ,
-    residual IVF-PQ) inherit the same requirement."""
+def test_md5_ann_encode_is_one_arrow_kernel(spark, sf_dir):
+    """The IVF/PQ md5 twins (and the round-9 compositions, IVF-PQ and
+    residual IVF-PQ) encode through the closure-codebook Arrow kernel
+    ``ivfpq_encode_codes``: the plan must contain its MapInArrow and
+    no min_by/max_by encode aggregate — a per-vector aggregate over a
+    codebook cross join would be the wrong plan at any scale."""
     for name in (
         "ext_simsearch_ivf_md5",
         "ext_simsearch_pq_md5",
         "ext_simsearch_ivfpq",
         "ext_simsearch_ivfpq_residual",
     ):
-        assert has_broadcast_join(QS[name](spark, sf_dir)), name
+        plan = formatted_plan(QS[name](spark, sf_dir))
+        assert "MapInArrow" in plan, name
+        assert "min_by" not in plan and "max_by" not in plan, name
 
 
 def test_interleave_broadcasts_source_dim(spark, sf_dir):

@@ -258,6 +258,42 @@ def _as_list(variables) -> list[str]:
     return list(variables)
 
 
+def _check_variables(variables, known) -> None:
+    """Reject any requested name outside ``known`` — called before the
+    location resolves, so an invalid request runs no Spark job."""
+    unknown = [v for v in _as_list(variables) if v not in known]
+    if unknown:
+        raise ForecastRequestError(f"unknown variables: {unknown}")
+
+
+def _checked_source(spark, weather, native_15, gran, variables):
+    """Check ``variables`` — daily names against ``DAILY_VARIABLE_SPECS``,
+    sub-daily names against the source frame's columns — and return
+    the source frame when it had to be built for that check, else
+    None.  Building a fixture frame costs ~0.3 s of driver time, so a
+    request without sub-daily names (or with an unknown place) does
+    not pay it before its location resolves."""
+    if gran == 1440:
+        _check_variables(variables, DAILY_VARIABLE_SPECS)
+        return None
+    if not _as_list(variables):
+        return None
+    wh = _weather_source(spark, weather, native_15)
+    _check_variables(variables, wh.columns)
+    return wh
+
+
+def _weather_source(spark, weather, native_15):
+    """The injected frame, else the native quarter-hour fixture for
+    15-min requests (the reference's minutely_15 block is real 15-min
+    model output, server.py:213-217), else the hourly fixture."""
+    if weather is not None:
+        return weather
+    if native_15:
+        return fixtures.weather_15min(spark)
+    return fixtures.weather_hourly(spark)
+
+
 def get_forecast_blocks(
     spark: SparkSession,
     place: str | None = None,
@@ -295,25 +331,23 @@ def get_forecast_blocks(
     # only when NEITHER horizon was caller-specified; otherwise the
     # upstream default applies (see resolve_horizon_params).
     forecast_days, _ = resolve_horizon_params(forecast_days, past_days)
-    loc_id, _, _ = _resolve_location(spark, place, latitude, longitude, geo)
-    # default 15-min path reads the TRUE quarter-hour source (the
-    # reference's minutely_15 block is real 15-min model output,
-    # server.py:213-217); an injected hourly frame is resampled instead
+    # an injected hourly frame is resampled to 15 min; the default path
+    # reads the native quarter-hour source
     native_15 = weather is None and granularity == 15
-    if weather is not None:
-        wh = weather
-    elif native_15:
-        wh = fixtures.weather_15min(spark)
-    else:
-        wh = fixtures.weather_hourly(spark)
-    horizon = filter_horizon_relative(
-        wh, "ts", now, past_days=past_days, forecast_days=forecast_days
-    )
     gran = 1440 if granularity >= 1440 else granularity
     # reference fallback chain for daily granularity (server.py:223):
     # `daily_variables or variables or defaults` — a caller supplying
     # only `variables` still gets their selection at daily granularity
     vars_ = (daily_variables or variables) if gran == 1440 else variables
+    wh = _checked_source(spark, weather, native_15, gran, vars_)
+    if gran != 1440:
+        _check_variables(daily_variables, DAILY_VARIABLE_SPECS)
+    loc_id, _, _ = _resolve_location(spark, place, latitude, longitude, geo)
+    if wh is None:
+        wh = _weather_source(spark, weather, native_15)
+    horizon = filter_horizon_relative(
+        wh, "ts", now, past_days=past_days, forecast_days=forecast_days
+    )
     primary_key = (
         "daily" if gran == 1440 else ("minutely_15" if gran == 15 else "hourly")
     )
@@ -409,8 +443,10 @@ def get_history(
         raise ForecastRequestError(f"invalid date: {exc}") from exc
     if sd > ed:
         raise ForecastRequestError("start_date must be <= end_date")
-    loc_id, _, _ = _resolve_location(spark, place, latitude, longitude, geo)
-    wh = weather if weather is not None else fixtures.weather_hourly(spark)
-    ranged = filter_date_range(wh, "ts", sd, ed)
     gran = 1440 if granularity >= 1440 else granularity
+    wh = _checked_source(spark, weather, False, gran, variables)
+    loc_id, _, _ = _resolve_location(spark, place, latitude, longitude, geo)
+    if wh is None:
+        wh = _weather_source(spark, weather, False)
+    ranged = filter_date_range(wh, "ts", sd, ed)
     return _materialize(ranged, gran, variables, loc_id, sort=sort)

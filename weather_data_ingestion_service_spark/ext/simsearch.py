@@ -300,80 +300,39 @@ def ivf_topk_md5(
     standard KMeans *init* step used directly as the codebook (FAISS
     ships the same degenerate mode; recall comes from ``nprobe``).
     Every step downstream is the exact IVF shape: one full-corpus
-    assignment pass against the broadcast codebook, queries probe
-    ``nprobe`` centroids, exact cosine re-rank inside the probed
-    inverted lists under the (cos DESC, id) total order.  The cosine
-    expression is kept IDENTICAL on assignment and re-rank (no
+    assignment pass (the coarse ``cid`` of the ``ivfpq_encode_codes``
+    kernel, whose cosine is bit-identical to the JVM expression),
+    queries probe ``nprobe`` centroids, exact cosine re-rank inside the
+    probed inverted lists under the (cos DESC, id) total order.  The
+    cosine expression is kept IDENTICAL on assignment and re-rank (no
     norm-hoisting shortcut) so the oracle can reproduce every
-    comparison bit-for-bit.  At 100 TB: codebook broadcast, corpus
-    written bucketed by ``cluster``, per-query work ~nprobe/n_clusters
-    of the corpus.
+    comparison bit-for-bit.  At 100 TB: codebook in the kernel
+    closure, corpus written bucketed by ``cluster``, per-query work
+    ~nprobe/n_clusters of the corpus.
 
     ``cent`` injects an external coarse quantizer (``cid``, ``ce``
     rows — e.g. the certified fixed-point KMeans centroids); by
     default the hash-sampled codebook derives from the corpus."""
-    from pyspark.sql import Window
-
-    if cent is None:
-        cent = (
-            corpus.select(
-                F.col(id_col).alias("cid"),
-                F.col(vec_col).alias("ce"),
-                F.md5(F.col(id_col).cast("string").cast("binary")).alias("h"),
-            )
-            .orderBy("h", "cid")
-            .limit(n_clusters)
-            .drop("h")
-        )
-
-    def _cos(a, b):
-        return _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
-
-    # assignment = argmax over the broadcast codebook as a max_by HASH
-    # aggregate (map-side partials combine before any exchange), not a
-    # per-vector window sort — at 100 TB this is the difference between
-    # one partial-combining pass and a full-corpus sort-within-key.
-    # Key (cos_c, -cid) == the oracle's (cos DESC, cid ASC) total order.
-    assign = (
-        corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", _cos("cvec", "ce"))
-        .groupBy("match_id")
-        .agg(
-            F.max_by("cid", F.struct("cos_c", (-F.col("cid")).alias("nc"))).alias(
-                "cid"
-            ),
-            F.max_by(
-                "cvec", F.struct("cos_c", (-F.col("cid")).alias("nc"))
-            ).alias("cvec"),
-        )
-        .select("match_id", "cvec", "cid")
+    cent, rows = _local_codebook(corpus, id_col, vec_col, n_clusters, cent)
+    dim = len(rows[0]["ce"]) if rows else 0
+    # only the coarse cid is used: m=1 keeps the unused code pass to
+    # one full-width L2
+    lists = ivfpq_encode_codes(
+        corpus, id_col, vec_col, n_clusters, 1, dim, cent=cent
+    ).select("match_id", "cid")
+    assign = lists.join(
+        corpus.select(
+            F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")
+        ),
+        "match_id",
     )
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", _cos("qvec", "ce"))
+    scored = (
+        _probe_lists(queries, cent, id_col, vec_col, nprobe)
+        .join(assign, "cid")
+        .filter(F.col("query_id") != F.col("match_id"))
+        .withColumn("cosine", _codebook_cos("qvec", "cvec"))
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cos_c").desc(), F.col("cid").asc()
-    )
-    probes = (
-        probes.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qvec", "cid")
-    )
-    cand = probes.join(assign, "cid").filter(
-        F.col("query_id") != F.col("match_id")
-    )
-    scored = cand.withColumn("cosine", _cos("qvec", "cvec"))
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def pq_topk_md5(
@@ -393,89 +352,23 @@ def pq_topk_md5(
     The 64-dim space splits into ``m`` subspaces of dim/m dims; every
     subspace shares ONE codebook: the sub-vectors of the ``n_cent``
     corpus vectors ranked first under (md5(str(id)), id).  Encoding
-    picks, per (vector, subspace), the centroid minimizing exact
-    squared L2 under the (l2, cid) total order — a ``min_by`` HASH
-    aggregate per subspace (map-side partials, one corpus pass, no
-    window sort).  ADC scoring reconstructs approx_dot(q, x) as the
-    FIXED-ORDER chain d_0 + d_1 + … + d_{m−1} of per-subspace dots
-    against the selected centroid slices — never a float SUM over
+    (the ``ivfpq_encode_codes`` kernel) picks, per (vector, subspace),
+    the centroid minimizing exact squared L2 under the (l2, cid) total
+    order.  ADC scoring (``_adc_topk``) reconstructs approx_dot(q, x)
+    as the FIXED-ORDER chain d_0 + d_1 + … + d_{m−1} of per-subspace
+    dots against the decoded centroid slices — never a float SUM over
     grouped rows, whose accumulation order neither engine guarantees.
     Codes are m small ints per vector (the 8×4-bit = 4-byte
-    compression that lets 100 TB of vectors live in RAM); at scale
-    the ADC scan reads codes only, queries broadcast their m distance
-    tables."""
-    from pyspark.sql import Window
-
-    sub = dim // m
-    cent = (
-        corpus.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("ce"),
-            F.md5(F.col(id_col).cast("string").cast("binary")).alias("h"),
-        )
-        .orderBy("h", "cid")
-        .limit(n_cent)
-        .drop("h")
-    )
-
-    def _l2(s):
-        return F.aggregate(
-            F.zip_with(
-                F.slice("cvec", s * sub + 1, sub),
-                F.slice("ce", s * sub + 1, sub),
-                lambda x, c: (x.cast("double") - c.cast("double"))
-                * (x.cast("double") - c.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    enc = (
-        corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec"))
-        .crossJoin(F.broadcast(cent))
-        .groupBy("match_id")
-        .agg(
-            *[
-                F.min_by(
-                    F.slice("ce", s * sub + 1, sub),
-                    F.struct(_l2(s).alias("l2"), F.col("cid").alias("cid")),
-                ).alias(f"cv{s}")
-                for s in range(m)
-            ]
-        )
+    compression that lets 100 TB of vectors live in RAM); PQ-flat by
+    design: the broadcast queries score every code."""
+    cent, rows = _local_codebook(corpus, id_col, vec_col, n_cent)
+    codes = ivfpq_encode_codes(
+        corpus, id_col, vec_col, n_cent, m, dim, cent=cent
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-
-    def _d(s):
-        return F.aggregate(
-            F.zip_with(
-                F.slice("qvec", s * sub + 1, sub),
-                F.col(f"cv{s}"),
-                lambda x, c: x.cast("double") * c.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    adc = _d(0)
-    for s in range(1, m):
-        adc = adc + _d(s)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(enc)
-        .filter(F.col("query_id") != F.col("match_id"))
-        .withColumn("adc", adc)
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "adc", "rank")
-    )
+    return _adc_topk(q, codes, rows, k, m, dim // m, on=None)
 
 
 def pq_topk_trained(
@@ -573,6 +466,21 @@ def _md5_codebook(corpus, id_col, vec_col, n):
     )
 
 
+def _local_codebook(corpus, id_col, vec_col, n, cent=None):
+    """Collect a codebook (``cent``, by default ``_md5_codebook``) ONCE
+    to the driver and re-inject it as a single-batch Arrow local
+    frame, so the encode kernel, the probe broadcast and the literal
+    decode maps all read it driver-locally.  The collect runs one job
+    (the codebook's TakeOrdered) when the caller's frame is built.
+    Returns ``(frame, rows sorted by cid)``."""
+    from ..io import local_frame
+
+    if cent is None:
+        cent = _md5_codebook(corpus, id_col, vec_col, n)
+    rows = sorted(cent.collect(), key=lambda r: int(r["cid"]))
+    return local_frame(corpus.sparkSession, rows, cent.schema), rows
+
+
 def _codebook_cos(a, b):
     return _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
 
@@ -659,6 +567,64 @@ def _rank_topk(scored, score_col, k):
     )
 
 
+def _literal_vec_map(cb_rows, lo, hi):
+    """``map(cid → ce[lo:hi])`` over the driver-held codebook rows as ONE
+    parsed ``F.expr`` literal.  Building it from F.lit/F.array/
+    F.create_map Columns costs one py4j round trip per call —
+    ~n_clusters·sub per map, ~3 s of pure driver time per serve at the
+    16×8 config (r14 measurement).  Parsing one string produces the
+    IDENTICAL expression tree: repr() emits the shortest
+    round-tripping decimal and Catalyst's double parser is correctly
+    rounded, so every literal is bit-identical (float→double is exact
+    too, so a decoded slice equals the codebook's own values)."""
+    return F.expr(
+        "map("
+        + ", ".join(
+            f"{int(r['cid'])}L, array("
+            + ", ".join(_lit_double_sql(v) for v in r["ce"][lo:hi])
+            + ")"
+            for r in cb_rows
+        )
+        + ")"
+    )
+
+
+def _adc_topk(probes, codes, cb_rows, k, m, sub, on="cid", lead=None):
+    """Decode → ADC → rank: the one scoring tail of the md5 PQ family
+    (``pq_topk_md5``, ``ivfpq_topk_md5``, the residual twin and the
+    persisted ``ivfpq_query_index``).
+
+    ``codes`` carries ``(match_id, c0..c{m-1})`` plus the join key
+    ``on``; each code decodes JVM-side through a per-subspace literal
+    map ``cid → centroid slice`` (``_literal_vec_map``).  Candidates
+    are ``probes ⋈ codes`` on ``on`` — or, with ``on=None``, the
+    broadcast query side × every code (PQ-flat).  ADC is the
+    FIXED-ORDER chain ``[lead +] d_0 + … + d_{m−1}`` of per-subspace
+    dots (never a grouped float SUM, whose accumulation order neither
+    engine guarantees), ranked under (adc DESC, match_id ASC), so a
+    DuckDB oracle reproduces every comparison bit-for-bit."""
+    keep = ["match_id"] + ([on] if on else [])
+    dec = codes.select(
+        *keep,
+        *[
+            F.element_at(
+                _literal_vec_map(cb_rows, s * sub, (s + 1) * sub),
+                F.col(f"c{s}"),
+            ).alias(f"cv{s}")
+            for s in range(m)
+        ],
+    )
+    cand = probes.join(dec, on) if on else F.broadcast(probes).crossJoin(dec)
+    terms = [_adc_subspace_dot(s, sub) for s in range(m)]
+    adc = terms[0] if lead is None else lead + terms[0]
+    for t in terms[1:]:
+        adc = adc + t
+    scored = cand.filter(F.col("query_id") != F.col("match_id")).withColumn(
+        "adc", adc
+    )
+    return _rank_topk(scored, "adc", k)
+
+
 def ivfpq_topk_md5(
     corpus: DataFrame,
     queries: DataFrame,
@@ -681,64 +647,18 @@ def ivfpq_topk_md5(
 
     One hash-sampled codebook (the ``n_clusters`` corpus vectors
     ranked first under ``(md5(str(id)), id)``) serves as BOTH the
-    coarse quantizer and the shared per-subspace codebook, so a
-    single broadcast cross join + one ``groupBy(id)`` hash aggregate
-    produces coarse assignment (``max_by`` under the (cos, −cid)
-    total order) and all ``m`` PQ code slices (``min_by`` per
-    subspace under the (l2, cid) total order) in ONE corpus pass —
-    map-side partials, no window sort, no second scan.  Codes encode
-    the RAW vector (PQ-flat within lists; residual encoding is the
-    recall refinement, not a different plan shape).  ADC is the
-    fixed-order chain of per-subspace dots (never a grouped float
-    SUM, whose accumulation order neither engine guarantees), so a
-    DuckDB oracle reproduces every comparison bit-for-bit.  At scale:
-    codebook broadcast, corpus written bucketed by ``cluster``,
-    per-query ADC work ∝ nprobe/n_clusters · |corpus| on 4-byte
-    codes."""
-    sub = dim // m
-    cent = _md5_codebook(corpus, id_col, vec_col, n_clusters)
-
-    def _l2(s):
-        return F.aggregate(
-            F.zip_with(
-                F.slice("cvec", s * sub + 1, sub),
-                F.slice("ce", s * sub + 1, sub),
-                lambda x, c: (x.cast("double") - c.cast("double"))
-                * (x.cast("double") - c.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    # ONE corpus pass: coarse assignment + all m PQ code slices
-    enc = (
-        corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", _codebook_cos("cvec", "ce"))
-        .groupBy("match_id")
-        .agg(
-            F.max_by(
-                "cid", F.struct("cos_c", (-F.col("cid")).alias("nc"))
-            ).alias("cid"),
-            *[
-                F.min_by(
-                    F.slice("ce", s * sub + 1, sub),
-                    F.struct(_l2(s).alias("l2"), F.col("cid").alias("cid")),
-                ).alias(f"cv{s}")
-                for s in range(m)
-            ],
-        )
+    coarse quantizer and the shared per-subspace codebook, so one
+    ``ivfpq_encode_codes`` pass yields coarse assignment and all ``m``
+    PQ codes.  Codes encode the RAW vector (PQ-flat within lists;
+    residual encoding is the recall refinement, not a different plan
+    shape).  Scoring is ``_adc_topk`` — the same tail as the persisted
+    ``ivfpq_query_index``, so both answer bit-identically."""
+    cent, rows = _local_codebook(corpus, id_col, vec_col, n_clusters)
+    codes = ivfpq_encode_codes(
+        corpus, id_col, vec_col, n_clusters, m, dim, cent=cent
     )
     probes = _probe_lists(queries, cent, id_col, vec_col, nprobe)
-    adc = _adc_subspace_dot(0, sub)
-    for s in range(1, m):
-        adc = adc + _adc_subspace_dot(s, sub)
-    scored = (
-        probes.join(enc, "cid")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .withColumn("adc", adc)
-    )
-    return _rank_topk(scored, "adc", k)
+    return _adc_topk(probes, codes, rows, k, m, dim // m)
 
 
 def ivfpq_residual_topk_md5(
@@ -761,79 +681,63 @@ def ivfpq_residual_topk_md5(
     ``dot(q, coarse) + Σ_s dot(q_s, code_s)`` — one extra fixed-order
     term, same probed-list scan shape.
 
-    Two corpus passes instead of one (the residual depends on the
-    coarse choice, so encoding cannot fold into the assignment
-    aggregate): pass 1 assigns ``(cid, coarse_ce)`` via ``max_by``;
-    pass 2 ``min_by``-encodes the residual slices against the same
-    broadcast codebook.  All comparisons stay on pinned IEEE doubles
-    under (metric, cid) total orders, so the DuckDB oracle restates
-    them exactly."""
-    sub = dim // m
-    cent = _md5_codebook(corpus, id_col, vec_col, n_clusters)
-
-    # pass 1: coarse assignment keeps the chosen centroid VECTOR
-    assign = (
-        corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", _codebook_cos("cvec", "ce"))
-        .groupBy("match_id")
-        .agg(
-            F.max_by(
-                "cid", F.struct("cos_c", (-F.col("cid")).alias("nc"))
-            ).alias("acid"),
-            F.max_by(
-                "ce", F.struct("cos_c", (-F.col("cid")).alias("nc"))
-            ).alias("coarse"),
-            F.max_by(
-                "cvec", F.struct("cos_c", (-F.col("cid")).alias("nc"))
-            ).alias("cvec"),
-        )
+    Two kernel passes (the residual depends on the coarse choice):
+    pass 1 assigns ``cid``; the residual ``x − coarse`` is computed
+    JVM-side in doubles with ``coarse`` decoded from ``cid``; pass 2
+    encodes the residual against the same codebook (its own ``cid``
+    — the residual's nearest centroid — is dropped).  All comparisons
+    stay on pinned IEEE doubles under (metric, cid) total orders, so
+    the DuckDB oracle restates them exactly."""
+    cent, rows = _local_codebook(corpus, id_col, vec_col, n_clusters)
+    coarse = _literal_vec_map(rows, 0, dim)
+    lists = ivfpq_encode_codes(
+        corpus, id_col, vec_col, n_clusters, m, dim, cent=cent
+    ).select("match_id", "cid")
+    res = lists.join(
+        corpus.select(
+            F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")
+        ),
+        "match_id",
+    ).select(
+        "match_id",
+        F.zip_with(
+            "cvec",
+            F.element_at(coarse, F.col("cid")),
+            lambda x, c: x.cast("double") - c,
+        ).alias("res"),
     )
-
-    # pass 2: residual slices min_by-encoded against the same codebook
-    # (assign's own cluster id rides as "acid" — "cid" below is the
-    # codebook's)
-    def _res_l2(s):
-        res = F.zip_with(
-            F.slice("cvec", s * sub + 1, sub),
-            F.slice("coarse", s * sub + 1, sub),
-            lambda x, c: x.cast("double") - c.cast("double"),
-        )
-        return F.aggregate(
-            F.zip_with(
-                res,
-                F.slice("ce", s * sub + 1, sub),
-                lambda r, c: (r - c.cast("double")) * (r - c.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    enc = (
-        assign.crossJoin(F.broadcast(cent))
-        .groupBy("match_id")
-        .agg(
-            F.first("acid").alias("cid"),
-            F.first("coarse").alias("coarse"),
-            *[
-                F.min_by(
-                    F.slice("ce", s * sub + 1, sub),
-                    F.struct(_res_l2(s).alias("l2"), F.col("cid").alias("cid")),
-                ).alias(f"cv{s}")
-                for s in range(m)
-            ],
-        )
+    codes = (
+        ivfpq_encode_codes(res, "match_id", "res", n_clusters, m, dim, cent=cent)
+        .drop("cid")
+        .join(lists, "match_id")
     )
     probes = _probe_lists(queries, cent, id_col, vec_col, nprobe)
-    adc = _dot(F.col("qvec"), F.col("coarse"))
-    for s in range(m):
-        adc = adc + _adc_subspace_dot(s, sub)
-    scored = (
-        probes.join(enc, "cid")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .withColumn("adc", adc)
-    )
-    return _rank_topk(scored, "adc", k)
+    lead = _dot(F.col("qvec"), F.element_at(coarse, F.col("cid")))
+    return _adc_topk(probes, codes, rows, k, m, dim // m, lead=lead)
+
+
+def _vector_check(dim, fn):
+    """Per-batch guard for an Arrow kernel's vector column: reject NULL
+    or ragged rows before the kernel reshapes them to ``(rows, dim)``
+    (numpy's own reshape error names neither the function nor the
+    expected width).  Returned as a nested function so the kernel
+    closure ships it by value to the Python workers."""
+
+    def check(vecs):
+        import numpy as np
+
+        if vecs.null_count:
+            raise ValueError(
+                f"{fn}: {vecs.null_count} NULL vector(s); expected dim={dim}"
+            )
+        lengths = np.diff(np.asarray(vecs.offsets))
+        if (lengths != dim).any():
+            bad = sorted(set(lengths.tolist()) - {dim})
+            raise ValueError(
+                f"{fn}: vector length(s) {bad}; expected dim={dim}"
+            )
+
+    return check
 
 
 def ivfpq_encode_codes(
@@ -847,18 +751,15 @@ def ivfpq_encode_codes(
 ) -> DataFrame:
     """One corpus pass → INTEGER IVF-PQ codes: per vector the coarse
     list id plus ``m`` per-subspace codebook ids
-    ``(match_id, cid, c0..c{m-1})`` — the persisted-index form of the
-    encoding ``ivfpq_topk_md5`` computes inline (there the aggregate
-    keeps the selected centroid SLICES; here it keeps their ids, which
-    is what an index stores: m small ints per vector, the 8×4-bit ≈
-    4-byte compression that keeps 100 TB of vectors RAM-resident).
-
-    Same hash-sampled codebook, same (cos, −cid) / (l2, cid) total
-    orders, same single broadcast-cross-join + one ``groupBy(id)``
-    hash aggregate (map-side partials, no window sort), so the chosen
-    centroids — and therefore any downstream ADC score — are
-    bit-identical to the inline twin's and restatable by the same
-    DuckDB oracle family.
+    ``(match_id, cid, c0..c{m-1})`` — what an index stores (m small
+    ints per vector, the 8×4-bit ≈ 4-byte compression that keeps
+    100 TB of vectors RAM-resident) and the ONE encode of the md5 ANN
+    family: ``ivf_topk_md5`` (coarse cid only), ``pq_topk_md5``,
+    ``ivfpq_topk_md5`` and the residual twin (two passes) all call it,
+    as do the index build, upsert and streaming paths.  Coarse
+    assignment is the argmax cosine under (cos, −cid), each code the
+    argmin subspace L2 under (l2, cid) — the total orders the DuckDB
+    oracle family restates.
 
     ``cent`` injects an externally-trained codebook (the streaming
     ingest path encodes arriving batches against the OFFLINE codebook
@@ -879,15 +780,21 @@ def ivfpq_encode_codes(
     cid-ascending columns = the (key, cid) / (key, −cid) struct
     orders; NaN keys are mapped to +inf first, which reproduces
     Spark's NaN-greatest comparison — ``nanSafeCompareDoubles`` also
-    treats −0.0 == 0.0, exactly numpy's ``==``)."""
+    treats −0.0 == 0.0, exactly numpy's ``==``).
+
+    The codebook is collected when the frame is BUILT: with the
+    default ``cent`` that runs one job (the md5 TakeOrdered); an
+    injected Arrow local frame (``_local_codebook``) collects
+    driver-locally.  Every vector must be a non-NULL array of exactly
+    ``dim`` values — anything else raises a ``ValueError`` naming this
+    function and ``dim``."""
     import numpy as np
     import pyarrow as pa
 
     sub = dim // m
     if cent is None:
         cent = _md5_codebook(corpus, id_col, vec_col, n_clusters)
-    # control-plane collect: n_clusters rows (every call site already
-    # holds it as an Arrow local frame, whose collect is driver-local)
+    # control-plane collect: n_clusters rows
     rows = sorted(cent.collect(), key=lambda r: int(r["cid"]))
     cids = np.array([int(r["cid"]) for r in rows], dtype=np.int64)
     C = np.array(
@@ -906,6 +813,7 @@ def ivfpq_encode_codes(
         [pa.field("match_id", pa.int64()), pa.field("cid", pa.int64())]
         + [pa.field(f"c{s}", pa.int64()) for s in range(m)]
     )
+    check = _vector_check(dim, "ivfpq_encode_codes")
 
     def encode(batches):
         for batch in batches:
@@ -918,11 +826,9 @@ def ivfpq_encode_codes(
                 )
                 continue
             ids = batch.column(0).to_numpy(zero_copy_only=False)
-            X = (
-                np.asarray(batch.column(1).flatten())
-                .astype(np.float64)
-                .reshape(n_b, dim)
-            )
+            vecs = batch.column(1)
+            check(vecs)
+            X = np.asarray(vecs.flatten()).astype(np.float64).reshape(n_b, dim)
             # cosine to every centroid: dot and norm accumulate over
             # ascending i exactly like the zip_with/aggregate folds
             dot = np.zeros((n_b, ncl))
@@ -930,7 +836,10 @@ def ivfpq_encode_codes(
             for i in range(dim):
                 dot += X[:, i, None] * C[None, :, i]
                 nx += X[:, i] * X[:, i]
-            cos = dot / (np.sqrt(nx)[:, None] * nc[None, :])
+            # a zero vector's 0/0 is NaN exactly as in the JVM; the
+            # NaN → +inf mapping below orders it
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dot / (np.sqrt(nx)[:, None] * nc[None, :])
             key = np.where(np.isnan(cos), np.inf, cos)
             cid_out = cids[key.argmax(axis=1)]
             out = {
@@ -981,12 +890,9 @@ def ivfpq_build_index(
     # only purpose was value identity, which the Arrow frame gives
     # bit-for-bit without the extra read job.  The codebook write and
     # the codes write (disjoint dirs) then overlap (guide §2.6).
-    from ..io import local_frame, overlap_jobs
+    from ..io import overlap_jobs
 
-    cent = _md5_codebook(corpus, id_col, vec_col, n_clusters)
-    cent_local = local_frame(
-        corpus.sparkSession, cent.collect(), cent.schema
-    )
+    cent_local, _rows = _local_codebook(corpus, id_col, vec_col, n_clusters)
     codes = ivfpq_encode_codes(
         corpus, id_col, vec_col, n_clusters, m, dim, cent=cent_local
     )
@@ -1030,11 +936,10 @@ def ivfpq_query_index(
        (plan-visible PartitionFilters, ~nprobe/n_clusters of the
        index); dynamic pruning would also work, but a static IN-list
        from a tiny control-plane read is strictly simpler;
-    3. codes decode JVM-side through per-subspace literal lookup maps
-       ``cid → centroid slice`` built from the driver-collected
-       codebook (float→double conversion is exact, so the decoded
-       slices — and the fixed-order ADC chain over them — are
-       bit-identical to the inline twin's and to the DuckDB oracle).
+    3. codes decode and score through ``_adc_topk`` — the inline
+       twins' own tail (literal-map decode from the driver-collected
+       codebook, fixed-order ADC chain), so the persisted index
+       answers bit-identically to them and to the DuckDB oracle.
 
     At 100 TB: the codes scan reads m+1 small ints per vector from
     nprobe/n_clusters of the files; everything corpus-sized stays
@@ -1053,50 +958,10 @@ def ivfpq_query_index(
     probed = sorted(
         {r["cid"] for r in probes.select("cid").distinct().collect()}
     )
-    # one F.expr TEXT per subspace map instead of ~n_clusters·sub F.lit
-    # Column objects: each F.lit/F.array/F.create_map call is a py4j
-    # round trip, and building the m maps column-by-column cost ~3 s of
-    # pure driver time per serve at the 16×8 config (r14 measurement —
-    # dominated the serve stage).  Parsing one literal string per
-    # subspace produces the IDENTICAL expression tree: repr() emits the
-    # shortest round-tripping decimal, and Catalyst's double parser is
-    # correctly rounded, so every literal is bit-identical.
-    slice_maps = {
-        s: F.expr(
-            "map("
-            + ", ".join(
-                f"{int(r['cid'])}L, array("
-                + ", ".join(
-                    _lit_double_sql(v)
-                    for v in r["ce"][s * sub : (s + 1) * sub]
-                )
-                + ")"
-                for r in cb_rows
-            )
-            + ")"
-        )
-        for s in range(m)
-    }
     codes = (
         spark.read.parquet(path + "/codes")
         .filter(F.col("cid").isin([int(c) for c in probed]))
         .withColumn("cid", F.col("cid").cast("long"))
-    )
-    dec = codes.select(
-        "match_id",
-        "cid",
-        *[
-            F.element_at(slice_maps[s], F.col(f"c{s}")).alias(f"cv{s}")
-            for s in range(m)
-        ],
-    )
-    adc = _adc_subspace_dot(0, sub)
-    for s in range(1, m):
-        adc = adc + _adc_subspace_dot(s, sub)
-    scored = (
-        probes.join(dec, "cid")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .withColumn("adc", adc)
     )
     # Eagerly materialize the tiny |Q|·k result (localCheckpoint cuts
     # the lineage WITHOUT registering in the plan-cache manager), then
@@ -1105,7 +970,7 @@ def ivfpq_query_index(
     # returns the lazy serving plan instead (plan assertions inspect
     # its PartitionFilters) and leaves the probe cache live — those
     # callers clear the cache themselves.
-    out = _rank_topk(scored, "adc", k)
+    out = _adc_topk(probes, codes, cb_rows, k, m, sub)
     if eager:
         out = out.localCheckpoint(eager=True)
         probes.unpersist()
@@ -1696,11 +1561,14 @@ def quantize_embeddings(
     )
 
 
-def label_centroids(
+def label_centroid_components(
     df: DataFrame, label_col: str, vec_col: str, scale_bits: int = 20
 ) -> DataFrame:
-    """Per-label mean embedding (class centroids / mean-pooling) as an
-    ``array<double>`` column, computed through exact integer moments.
+    """Per-label mean embedding (class centroids / mean-pooling) through
+    exact integer moments, as one scalar row per ``(label, pos)``
+    centroid component (``pos`` 0-based) — the cross-engine-comparable
+    shape (hash/canonical tooling can sort scalar rows; it cannot hash
+    arrays).
 
     Float sums are order-dependent, so a naive ``avg`` over a shuffled
     table is not reproducible (and never hash-matches another engine).
@@ -1711,31 +1579,7 @@ def label_centroids(
     posexplode + hash-agg; the component dimension fans out 64x before
     the shuffle, but rows are three longs wide, and at 100 TB the
     partial aggregation collapses them to (labels x dims) before the
-    exchange.
-    """
-    mean = F.col("value").alias("m")
-    return (
-        label_centroid_components(df, label_col, vec_col, scale_bits)
-        .select("label", "pos", mean)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x.m,
-            ).alias("centroid")
-        )
-    )
-
-
-def label_centroid_components(
-    df: DataFrame, label_col: str, vec_col: str, scale_bits: int = 20
-) -> DataFrame:
-    """Long/tidy form of :func:`label_centroids`: one scalar row per
-    ``(label, pos)`` centroid component instead of an ``array<double>``
-    column.  This is the cross-engine-comparable shape (hash/canonical
-    tooling can sort scalar rows; it cannot hash arrays), and the shape
-    the collapsed-to-array variant builds on.  Same exact-integer-moment
-    math; ``pos`` is 0-based."""
+    exchange."""
     scale = float(1 << scale_bits)
     ex = df.select(
         F.col(label_col).alias("label"),
@@ -2821,93 +2665,24 @@ def _kmeans_multi_arrow(q256, ksub: int, m: int, sub: int, n_iter: int):
     return books
 
 
-def _encode_refined(q256, coarse_np, books_np, m: int, sub: int):
-    """ENCODE stage, shared by inline query and index build: ONE
-    narrow Arrow pass over the quantized corpus — per batch, the
-    coarse assignment and all m PQ codes come from exact int64 numpy
-    matmuls against the closure-shipped codebooks (the FAISS-style
-    encode kernel; ~160 KB of codebooks per worker, no join, no
-    shuffle).  ``np.argmin``'s first-minimum rule IS the (distance,
-    cid)/(distance, code) tie-break, and every term is exact int64
-    (max ≈ dim·32512² ≈ 6.8e10), so the output is bit-identical to
-    the broadcast-join formulation it replaced — the DuckDB oracle
-    replay certifies exactly that.  Returns the coarse assignment and
-    the long-form code table WITH the list id attached —
-    ``(match_id, cid, s, code)``, the inverted-list record an index
-    persists (a production layout pivots the m rows wide)."""
-    import numpy as np
-    import pyarrow as pa
-
-    C = np.ascontiguousarray(coarse_np)
-    B = [np.ascontiguousarray(b) for b in books_np]
-    c2 = (C * C).sum(axis=1)
-    b2 = [(b * b).sum(axis=1) for b in B]
-    dim = C.shape[1]
-
-    out_schema = pa.schema(
-        [
-            pa.field("match_id", pa.int64()),
-            pa.field("cid", pa.int64()),
-            pa.field("s", pa.int64()),
-            pa.field("code", pa.int64()),
-        ]
-    )
-
-    def encode(batches):
-        for batch in batches:
-            n_b = batch.num_rows
-            if n_b == 0:
-                # explicit-schema empty batch (the CLAUDE.md
-                # zero-row-first-batch Arrow rule)
-                yield pa.RecordBatch.from_pydict(
-                    {f.name: [] for f in out_schema}, schema=out_schema
-                )
-                continue
-            ids = batch.column("match_id").to_numpy(zero_copy_only=False)
-            # ListArray.flatten() is offset-aware → the rows' values
-            # contiguously, no per-row Python lists
-            X = np.asarray(
-                batch.column("q").flatten(), dtype=np.int64
-            ).reshape(n_b, dim)
-            x2 = (X * X).sum(axis=1)
-            dc = x2[:, None] - 2 * (X @ C.T) + c2[None, :]
-            cid = dc.argmin(axis=1)
-            codes = np.empty((n_b, m), dtype=np.int64)
-            for s in range(m):
-                Xs = np.ascontiguousarray(X[:, s * sub:(s + 1) * sub])
-                xs2 = (Xs * Xs).sum(axis=1)
-                ds = xs2[:, None] - 2 * (Xs @ B[s].T) + b2[s][None, :]
-                codes[:, s] = ds.argmin(axis=1)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "match_id": np.repeat(ids.astype(np.int64), m),
-                    "cid": np.repeat(cid, m),
-                    "s": np.tile(np.arange(m, dtype=np.int64), n_b),
-                    "code": codes.reshape(-1),
-                },
-                schema=out_schema,
-            )
-
-    codes_cid = q256.select("match_id", "q").mapInArrow(
-        encode, "match_id long, cid long, s long, code long"
-    )
-    lists_df = codes_cid.filter(F.col("s") == 0).select("match_id", "cid")
-    return lists_df, codes_cid
-
-
 def _encode_refined_wide(q256, coarse_np, books_np, m: int, sub: int):
-    """The WIDE-RECORD variant of ``_encode_refined`` (r15, guide
-    §2.4): one Arrow pass emitting the epoch-store record directly —
-    ``(match_id, cid, codes array<long>[m], q, scale)`` with ``q`` and
-    ``scale`` passed through the batch untouched.  The long-form
-    kernel + ``groupBy(match_id, cid).collect_list`` pivot + join back
-    to ``q256`` that ``ivfpq_refined_encode_epoch`` previously ran
-    cost one hash exchange, two ObjectHashAggregates, a broadcast
-    join AND a second full corpus scan+quantize (the join's q256
-    subtree re-executed — no exchange reuse across the different
-    shapes).  Identical math to ``_encode_refined`` (same int64
-    argmin kernel, codes ordered by subspace = the array_sort-by-s
-    pivot), so the record is bit-identical."""
+    """ENCODE stage of the trained (int8 ×256-grid) path — its one
+    encode kernel, shared by the inline query, the index build and the
+    upsert epochs: ONE narrow Arrow pass over the quantized corpus —
+    per batch, the coarse assignment and all m PQ codes come from exact
+    int64 numpy matmuls against the closure-shipped codebooks (the
+    FAISS-style encode kernel; ~160 KB of codebooks per worker, no
+    join, no shuffle).  ``np.argmin``'s first-minimum rule IS the
+    (distance, cid)/(distance, code) tie-break, and every term is exact
+    int64 (max ≈ dim·32512² ≈ 6.8e10), so the output is bit-identical
+    to the broadcast-join formulation it replaced — the DuckDB oracle
+    replay certifies exactly that.
+
+    Emits the wide epoch-store record ``(match_id, cid, codes
+    array<long>[m], q, scale)`` with ``q`` and ``scale`` passed through
+    untouched; ``_long_codes`` derives the long-form inverted-list
+    record ``(match_id, cid, s, code)`` from it.  NULL or ragged ``q``
+    rows raise a ``ValueError`` naming this function and ``dim``."""
     import numpy as np
     import pyarrow as pa
 
@@ -2926,6 +2701,7 @@ def _encode_refined_wide(q256, coarse_np, books_np, m: int, sub: int):
             pa.field("scale", pa.float64()),
         ]
     )
+    check = _vector_check(dim, "_encode_refined_wide")
 
     def encode(batches):
         for batch in batches:
@@ -2935,6 +2711,7 @@ def _encode_refined_wide(q256, coarse_np, books_np, m: int, sub: int):
                     {f.name: [] for f in out_schema}, schema=out_schema
                 )
                 continue
+            check(batch.column("q"))
             X = np.asarray(
                 batch.column("q").flatten(), dtype=np.int64
             ).reshape(n_b, dim)
@@ -2969,6 +2746,15 @@ def _encode_refined_wide(q256, coarse_np, books_np, m: int, sub: int):
         "match_id long, cid long, codes array<long>, "
         "q array<long>, scale double",
     )
+
+
+def _long_codes(wide):
+    """The long-form inverted-list record ``(match_id, cid, s, code)``
+    — one row per (vector, subspace) — from ``_encode_refined_wide``'s
+    wide record."""
+    return wide.select(
+        "match_id", "cid", F.posexplode("codes").alias("s", "code")
+    ).withColumn("s", F.col("s").cast("long"))
 
 
 def _quantize_queries(queries, id_col, vec_col):
@@ -3121,9 +2907,9 @@ def ivfpq_refine_topk(
        config, 0.97 at nprobe=32 — touching only ``shortlist`` full
        vectors per query.
 
-    Stages live in ``_train_refined_codebooks`` / ``_encode_refined``
-    / ``_serve_refined``, verbatim-shared with the persisted-index
-    lifecycle (``ivfpq_refined_build_index`` /
+    Stages live in ``_train_refined_codebooks`` /
+    ``_encode_refined_wide`` / ``_serve_refined``, verbatim-shared with
+    the persisted-index lifecycle (``ivfpq_refined_build_index`` /
     ``ivfpq_refined_query_index``) so the split cannot change a score.
 
     Returns (query_id, match_id, rank, adc, refine_micro): ``adc`` the
@@ -3148,7 +2934,9 @@ def ivfpq_refine_topk(
         spark, q256, corpus, id_col, vec_col,
         n_clusters, ksub, m, sub, dim, n_iter, driver_max_vectors,
     )
-    _lists_df, codes_cid = _encode_refined(q256, coarse_np, books_np, m, sub)
+    codes_cid = _long_codes(
+        _encode_refined_wide(q256, coarse_np, books_np, m, sub)
+    )
     qq = _quantize_queries(queries, id_col, vec_col)
     qq.persist()
     out = _serve_refined(
@@ -3176,7 +2964,7 @@ def ivfpq_refined_build_index(
     """BUILD-ONCE half of the serving-grade TRAINED index lifecycle:
     train the realistic-config codebooks (coarse k=64 + per-subspace
     k=256 — ``_train_refined_codebooks``), encode the corpus
-    (``_encode_refined``), and persist FOUR tables under ``path``:
+    (``_encode_refined_wide``), and persist FOUR tables under ``path``:
 
     - ``coarse``  — the n_clusters coarse centroids (control-plane);
     - ``books``   — the m·ksub subspace codebook entries;
@@ -3206,7 +2994,7 @@ def ivfpq_refined_build_index(
     finally:
         # the write stage unpersists on success; this covers a failure
         # part-way through any stage (unpersisting twice is a no-op)
-        for key in ("codes_cid", "q256"):
+        for key in ("wide", "q256"):
             frame = state.get(key)
             if frame is not None:
                 frame.unpersist()
@@ -3267,16 +3055,16 @@ def ivfpq_refined_build_stages(
         books_df.coalesce(1).write.mode("overwrite").parquet(path + "/books")
 
     def encode():
-        lists_df, codes_cid = _encode_refined(
+        wide = _encode_refined_wide(
             state["q256"], state["coarse_np"], state["books_np"], m, sub
         )
         # persist: the Arrow encode pass feeds BOTH the codes write and
-        # (via lists_df) the vectors write — without the barrier it
-        # would run twice
-        codes_cid.persist()
+        # the vectors write (q and scale ride in the wide record) —
+        # without the barrier it would run twice
+        wide.persist()
         if eager_encode:
-            codes_cid.count()
-        state["lists_df"], state["codes_cid"] = lists_df, codes_cid
+            wide.count()
+        state["wide"] = wide
 
     def write():
         # repartition("cid") first: a partitionBy write from N cached
@@ -3284,20 +3072,19 @@ def ivfpq_refined_build_stages(
         # 917 files / 50 s vs 64 files / 3.2 s); one file per list
         # bounds file count by n_clusters at any corpus size.
         # The codes and vectors writes land in disjoint dirs and read
-        # only persisted frames (concurrent computation of a cached
+        # only the persisted record (concurrent computation of a cached
         # block deduplicates via the BlockManager's block locks), so
         # they overlap from a driver thread pool (guide §2.6).
         from ..io import overlap_jobs
 
         try:
             overlap_jobs(
-                lambda: state["codes_cid"]
+                lambda: _long_codes(state["wide"])
                 .repartition("cid")
                 .write.mode("overwrite")
                 .partitionBy("cid")
                 .parquet(path + "/codes"),
-                lambda: state["q256"]
-                .join(state["lists_df"], "match_id")
+                lambda: state["wide"]
                 .select("match_id", "q", "scale", "cid")
                 .repartition("cid")
                 .write.mode("overwrite")
@@ -3305,7 +3092,7 @@ def ivfpq_refined_build_stages(
                 .parquet(path + "/vectors"),
             )
         finally:
-            state["codes_cid"].unpersist()
+            state["wide"].unpersist()
             state["q256"].unpersist()
 
     return [("train", train), ("encode", encode), ("write", write)], state

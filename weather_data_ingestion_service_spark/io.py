@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schemas import TEST_TABLES
 from .session import configure
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -54,10 +53,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # same truncation DuckDB applies to TIMESTAMP(NANOS)).
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return _normalize_timestamps(df)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TEST_TABLES}
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -13,7 +13,7 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Open-Meteo forward-horizon cap: ``min(forecast_days, 16)``
@@ -120,8 +120,3 @@ def filter_null_guard(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     (server.py:196-197, 329-330).
     """
     return df.na.drop(subset=list(cols))
-
-
-def theta_filter(df: DataFrame, predicate: Column) -> DataFrame:
-    """Arbitrary θ-predicate — any Catalyst boolean expression."""
-    return df.filter(predicate)

@@ -1415,8 +1415,6 @@ def _load_extensions() -> None:
     from . import registry_r11  # noqa: F401
     from . import registry_r12  # noqa: F401
     from . import registry_r13  # noqa: F401
-    from . import registry_r14  # noqa: F401
-    from . import registry_r15  # noqa: F401
 
 
 #: SURVEY.md §2-mandated ids beyond the ``ext_*`` prefix — served ahead

@@ -1666,9 +1666,8 @@ def q_ext_embed_centroids(spark, sf_dir):
     order-dependent; scaled-int64 sums are associative and
     engine-exact.  Published as scalar ``(label, pos, value)`` rows
     (0-based ``pos``): hash-comparison tooling sorts rows, and rows
-    with array cells are unsortable/unhashable — the collapsed
-    ``array<double>`` form stays available as
-    ``simsearch.label_centroids``."""
+    with array cells are unsortable/unhashable —
+    ``simsearch.label_centroid_components``."""
     from .ext.simsearch import label_centroid_components
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .io import load_table, local_frame
 from .registry import (
     _clean_stale_scratch,
+    _register_changed_since_green,
     _session_tag,
     register,
 )
@@ -1414,6 +1415,9 @@ def q_ext_simsearch_ivf_kmeans(spark, sf_dir):
         cent=cent,
     )
     return out.withColumn("cosine", F.round("cosine", 3))
+
+
+_register_changed_since_green("ext_simsearch_ivf_kmeans")
 
 
 def _pq_kmeans_oracle(k_cent=8, t=3, m=8, sub=8, topk=3):

@@ -49,10 +49,6 @@ def _tok(col="text"):
     return F.filter(F.split(F.lower(F.col(col)), r"\s+"), lambda t: t != "")
 
 
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-
-
 # =====================================================================
 # A. Formats & storage layout
 # =====================================================================

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .io import load_table, local_frame
-from .registry import register
+from .registry import _register_changed_since_green, register
 
 # (round-9's stream_session_exec / ext_graph_triangles re-cert calls
 # removed at round-10 start: CORRECTNESS_r09 shows both green again.)
@@ -438,6 +438,9 @@ def q_ext_simsearch_ivf_md5(spark, sf_dir):
     return out.withColumn("cosine", F.round("cosine", 3))
 
 
+_register_changed_since_green("ext_simsearch_ivf_md5")
+
+
 # =====================================================================
 # C2. Product quantization with a hash-sampled codebook → oracle-paired
 # =====================================================================
@@ -518,6 +521,9 @@ def q_ext_simsearch_pq_md5(spark, sf_dir):
         n_cent=16,
     )
     return out.withColumn("adc", F.round("adc", 3))
+
+
+_register_changed_since_green("ext_simsearch_pq_md5")
 
 
 @register(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .io import lit_double_array, load_table, local_frame
-from .registry import register
+from .registry import _register_changed_since_green, register
 
 # (round-10's obs_manifest_diff / ext_text_bm25 re-cert calls removed
 # at round-11 start: CORRECTNESS_r10 shows both green again.)
@@ -142,6 +142,9 @@ def q_ext_simsearch_ivfpq(spark, sf_dir):
     return out.withColumn("adc", F.round("adc", 3))
 
 
+_register_changed_since_green("ext_simsearch_ivfpq")
+
+
 def _ivfpq_residual_oracle(m=8, sub=8, n_cent=16, nprobe=4, k=3):
     from .registry_ext import _COSINE_SQL
 
@@ -245,6 +248,9 @@ def q_ext_simsearch_ivfpq_residual(spark, sf_dir):
     return out.withColumn("adc", F.round("adc", 3))
 
 
+_register_changed_since_green("ext_simsearch_ivfpq_residual")
+
+
 def _ivfpq_recall_oracle(k=3):
     from .registry_ext import _COSINE_SQL
 
@@ -311,6 +317,9 @@ def q_ext_eval_ivfpq_recall(spark, sf_dir):
     return local_frame(
         spark, rows, "n_queries long, n_truth long, n_hits long, recall_micro long"
     )
+
+
+_register_changed_since_green("ext_eval_ivfpq_recall")
 
 
 # =====================================================================
