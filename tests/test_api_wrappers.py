@@ -3,6 +3,7 @@ granularity dispatch, horizon clamp, place-overrides-latlon, error
 envelopes — semantics cited from reference server.py."""
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from weather_data_ingestion_service_spark import fixtures
@@ -206,6 +207,22 @@ class TestGetForecast:
     def test_out_of_range_latlon_rejected(self, spark, weather):
         with pytest.raises(ForecastRequestError, match="invalid coordinates"):
             get_forecast(spark, latitude=123.0, longitude=500.0, weather=weather)
+
+    @pytest.mark.parametrize(
+        "latitude,longitude,match",
+        [
+            ("abc", 14.4, "invalid latitude: 'abc'"),
+            (50.0, [14.4], r"invalid longitude: \[14.4\]"),
+            (True, 14.4, "invalid latitude: True"),
+        ],
+        ids=["string", "list", "bool"],
+    )
+    def test_bad_latlon_types_rejected(self, spark, latitude, longitude, match):
+        """Coordinates are checked at bind time, before the nearest-
+        location snap: a non-numeric value is a request error, not a
+        ``ValueError`` from ``float()``."""
+        with pytest.raises(ForecastRequestError, match=match):
+            get_forecast(spark, latitude=latitude, longitude=longitude)
 
 
 class TestGetHistory:
@@ -601,6 +618,104 @@ class TestStdioServe:
             resp = handle_request(spark, case)
             assert resp["status"] == "error" and resp["message"]
 
+    @pytest.mark.parametrize(
+        "params,message",
+        [
+            ({"latitude": "abc", "longitude": 14.4}, "invalid latitude: 'abc'"),
+            ({"latitude": 50.0, "longitude": None, "place": 7}, "invalid place: 7"),
+            ({"place": ["Prague, CZ"]}, "invalid place: ['Prague, CZ']"),
+        ],
+        ids=["non_numeric_latitude", "non_string_place", "list_place"],
+    )
+    def test_bad_param_types_are_envelopes(self, spark, params, message):
+        """Wrong JSON types come back as error envelopes (they used to
+        escape as ``ValueError`` / ``SparkRuntimeException``)."""
+        from weather_data_ingestion_service_spark.api.serve import handle_request
+
+        resp = handle_request(spark, {"tool": "get_forecast", "params": params})
+        assert resp == {"status": "error", "message": message}
+
+    def test_unexpected_tool_exception_is_envelope(self, spark, monkeypatch):
+        from weather_data_ingestion_service_spark.api import serve
+
+        def boom(spark_, **params):
+            raise RuntimeError("kaput")
+
+        monkeypatch.setitem(serve._TOOLS, "get_forecast", boom)
+        resp = serve.handle_request(spark, {"tool": "get_forecast", "params": {}})
+        assert resp == {"status": "error",
+                        "message": "internal error: RuntimeError: kaput"}
+
+    @pytest.mark.parametrize("framing", ["rpc", "legacy"])
+    def test_stdio_answers_unexpected_exception(self, spark, monkeypatch, framing):
+        """An exception escaping one line's handler is answered — JSON-RPC
+        -32603 for an RPC line, an error envelope for a legacy line —
+        and the loop goes on to serve the next line."""
+        import io
+        import json
+
+        from weather_data_ingestion_service_spark.api import serve
+
+        def boom(spark_, request):
+            raise RuntimeError("kaput")
+
+        monkeypatch.setattr(serve, "handle_request", boom)
+        if framing == "rpc":
+            bad = {"jsonrpc": "2.0", "id": 7, "method": "tools/call",
+                   "params": {"name": "get_forecast", "arguments": {}}}
+            want = {"jsonrpc": "2.0", "id": 7, "error": {
+                "code": -32603, "message": "internal error: RuntimeError: kaput"}}
+        else:
+            bad = {"tool": "get_forecast", "params": {}}
+            want = {"status": "error",
+                    "message": "internal error: RuntimeError: kaput"}
+        ping = {"jsonrpc": "2.0", "id": 8, "method": "ping"}
+        stdin = io.StringIO(json.dumps(bad) + "\n" + json.dumps(ping) + "\n")
+        stdout = io.StringIO()
+        serve.serve_stdio(spark, stdin, stdout)
+        out = [json.loads(l) for l in stdout.getvalue().splitlines()]
+        assert out == [want, {"jsonrpc": "2.0", "id": 8, "result": {}}]
+
+    def test_request_log_line_on_stderr(self, spark, capsys):
+        """One JSON line per tool request on stderr with tool, status,
+        error class, rows per block, truncated and latency; stdout of
+        the stdio loop holds only responses."""
+        import io
+        import json
+
+        from weather_data_ingestion_service_spark.api.serve import serve_stdio
+
+        msgs = [
+            {"tool": "get_forecast",
+             "params": {"place": "Paris, FR", "forecast_days": 1,
+                        "variables": "temperature_2m",
+                        "daily_variables": "precipitation_sum"}},
+            {"jsonrpc": "2.0", "id": 2, "method": "tools/call",
+             "params": {"name": "get_forecast",
+                        "arguments": {"place": "Atlantis"}}},
+            {"jsonrpc": "2.0", "id": 3, "method": "ping"},
+        ]
+        stdin = io.StringIO("".join(json.dumps(m) + "\n" for m in msgs))
+        stdout = io.StringIO()
+        capsys.readouterr()
+        serve_stdio(spark, stdin, stdout)
+        captured = capsys.readouterr()
+        assert captured.out == ""
+        responses = [json.loads(l) for l in stdout.getvalue().splitlines()]
+        assert [r.get("status") or r["id"] for r in responses] == ["success", 2, 3]
+        logs = [json.loads(l) for l in captured.err.splitlines()
+                if l.startswith('{"event": "tool_request"')]
+        assert len(logs) == 2  # ping is not a tool request
+        ok, bad = logs
+        assert set(ok) == {"event", "tool", "status", "error", "rows",
+                           "truncated", "latency_ms"}
+        assert ok["tool"] == "get_forecast" and ok["status"] == "success"
+        assert ok["error"] is None and ok["truncated"] is False
+        assert ok["rows"] == {"hourly": 24, "daily": 1}
+        assert ok["latency_ms"] > 0
+        assert bad["status"] == "error" and bad["error"] == "ForecastRequestError"
+        assert bad["rows"] == {}
+
     def test_result_rows_capped_before_collect(self, spark, monkeypatch):
         """The serving collect is bounded: past the cap the block is
         cut at max_rows and flagged truncated — a pathological request
@@ -745,3 +860,110 @@ class TestStdioServe:
         serve_stdio(spark, stdin, stdout)
         lines = [json.loads(l) for l in stdout.getvalue().strip().split("\n")]
         assert [r["status"] for r in lines] == ["success", "error"]
+
+
+class TestServedSource:
+    """The tool server's per-session cached fixture source and its
+    driver-side geocoder must answer exactly what a freshly generated
+    fixture and the Spark place-key join answer."""
+
+    @settings(max_examples=15, deadline=None)
+    @given(
+        names=st.lists(
+            st.text(
+                alphabet=st.one_of(
+                    st.characters(),
+                    st.sampled_from("İıKÅΣßﬁ ,.-_AZaz09"),
+                ),
+                max_size=24,
+            ),
+            min_size=1,
+            max_size=40,
+        )
+    )
+    @example(names=["İstanbul", "Kelvin", "Straße", "  Paris,,FR  ", ""])
+    def test_place_key_twin_matches_spark(self, spark, names):
+        from weather_data_ingestion_service_spark.operators.joins import (
+            normalize_place_key,
+            normalize_place_text,
+        )
+
+        df = spark.createDataFrame([(i, n) for i, n in enumerate(names)], "i int, name string")
+        got = dict(df.select("i", normalize_place_key("name").alias("k")).collect())
+        assert [got[i] for i in range(len(names))] == [normalize_place_text(n) for n in names]
+
+    #: hourly, 15-min with a daily block, and daily across 2024-01-11 for
+    #: every place: under New York time Vienna's 2024-01-11 rain sum
+    #: straddles a partition boundary of the fixture, and a cache
+    #: coalesced to one partition moves it by an ULP
+    REQUESTS = [
+        {"tool": "get_forecast",
+         "params": {"place": "Prague, CZ", "past_days": 3, "forecast_days": 2}},
+        {"tool": "get_forecast",
+         "params": {"place": "wien", "granularity": 15, "forecast_days": 1,
+                    "daily_variables": "precipitation_sum,temperature_2m_max"}},
+        *(
+            {"tool": "get_history",
+             "params": {"place": place, "start_date": "2024-01-10",
+                        "end_date": "2024-01-12", "granularity": 1440}}
+            for place in fixtures.PLACES
+        ),
+        {"tool": "get_history",
+         "params": {"latitude": 48.9, "longitude": 2.3, "start_date": "2024-01-11",
+                    "end_date": "2024-01-11"}},
+    ]
+
+    @pytest.fixture(params=["UTC", "America/New_York"])
+    def session_tz(self, spark, request):
+        from weather_data_ingestion_service_spark.api import wrappers
+
+        key = "spark.sql.session.timeZone"
+        before = spark.conf.get(key)
+        spark.conf.set(key, request.param)
+        try:
+            yield request.param
+        finally:
+            spark.conf.set(key, before)
+            for k in [k for k in wrappers._SERVED if k[2] != before]:
+                wrappers._SERVED.pop(k).unpersist()
+
+    def test_served_envelopes_equal_uncached_fixture(self, spark, monkeypatch, session_tz):
+        """Byte-identical envelopes from the cached source (cold and
+        warm) and from a freshly generated, uncached fixture.  The
+        non-UTC case runs after UTC frames are memoized, so a memo that
+        ignored the session time zone would serve UTC timestamps here."""
+        import json
+
+        from weather_data_ingestion_service_spark.api import wrappers
+        from weather_data_ingestion_service_spark.api.serve import handle_request
+
+        for df in wrappers._SERVED.values():
+            df.unpersist()
+        with monkeypatch.context() as m:
+            m.setattr(wrappers, "_served_fixture", lambda spark_, build: build(spark_))
+            assert not fixtures.weather_hourly(spark).storageLevel.useMemory
+            want = [json.dumps(handle_request(spark, r)) for r in self.REQUESTS]
+        assert all('"status": "success"' in w for w in want)
+        for _ in ("cold", "warm"):
+            assert [json.dumps(handle_request(spark, r)) for r in self.REQUESTS] == want
+        served = [df for k, df in wrappers._SERVED.items() if k[2] == session_tz]
+        assert served and all(df.storageLevel.useMemory for df in served)
+
+    def test_warm_request_job_counts(self, spark):
+        """On a warm session a place-name geocode runs no Spark job and
+        an hourly request runs exactly one (its collect)."""
+        sc = spark.sparkContext
+        hourly = {"tool": "get_forecast",
+                  "params": {"place": "PRAHA", "forecast_days": 2}}
+        TestStdioServe._jobs_in_group(spark, "wds-test-warm-up", hourly)
+
+        sc.setJobGroup("wds-test-geocode-jobs", "test_api_wrappers")
+        try:
+            assert geocode(spark, "berlin germany")[0] == 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("wds-test-geocode-jobs")) == []
+
+        resp, jobs = TestStdioServe._jobs_in_group(spark, "wds-test-hourly-jobs", hourly)
+        assert resp["status"] == "success"
+        assert len(jobs) == 1

@@ -50,6 +50,8 @@ from __future__ import annotations
 
 import json
 import sys
+import time
+import traceback
 from typing import Any, TextIO
 
 from pyspark.sql import DataFrame, SparkSession
@@ -103,13 +105,37 @@ def _df_to_columnar(
 
 def handle_request(spark: SparkSession, request: str | dict) -> dict:
     """Dispatch one tool call; never raises — errors become envelope
-    values (reference server.py:280, 369)."""
+    values (reference server.py:280, 369).
+
+    Writes one JSON line per request to stderr (never stdout, which
+    carries only responses): tool, status, error class, rows per
+    block, truncated and latency_ms."""
+    t0 = time.perf_counter()
+    envelope, tool, error = _dispatch(spark, request)
+    data = envelope.get("data", {})
+    print(json.dumps({
+        "event": "tool_request",
+        "tool": tool,
+        "status": envelope["status"],
+        "error": error,
+        "rows": {k: len(v["time"]) for k, v in data.items() if isinstance(v, dict)},
+        "truncated": data.get("truncated", False),
+        "latency_ms": round((time.perf_counter() - t0) * 1000, 3),
+    }), file=sys.stderr, flush=True)
+    return envelope
+
+
+def _dispatch(spark, request) -> tuple[dict, Any, str | None]:
+    """``(envelope, tool name, error class or None)`` for one call."""
+    tool = None
     try:
         req = json.loads(request) if isinstance(request, str) else request
+        if not isinstance(req, dict):
+            raise ForecastRequestError(f"invalid request: {req!r}")
         tool = req.get("tool")
         fn = _TOOLS.get(tool)
         if fn is None:
-            return {"status": "error", "message": f"unknown tool: {tool!r}"}
+            raise ForecastRequestError(f"unknown tool: {tool!r}")
         params = dict(req.get("params") or {})
         result = fn(spark, **params)
         if isinstance(result, dict):
@@ -136,18 +162,26 @@ def handle_request(spark: SparkSession, request: str | dict) -> dict:
             truncated = truncated or payload["truncated"]
         if truncated:
             data["truncated"] = True
-        return {"status": "success", "data": data}
-    except ForecastRequestError as exc:
-        return {"status": "error", "message": str(exc)}
-    except HttpStatusError as exc:
+        return {"status": "success", "data": data}, tool, None
+    except Exception as exc:  # every failure is an envelope value
+        message = _error_message(exc, tool)
+        return {"status": "error", "message": message}, tool, type(exc).__name__
+
+
+def _error_message(exc: Exception, tool) -> str:
+    if isinstance(exc, ForecastRequestError):
+        return str(exc)
+    if isinstance(exc, HttpStatusError):
         # live-fetch path failures mirror the reference's enriched
         # HTTP-400 guidance (server.py:263-277)
-        kind = "history" if tool == "get_history" else "forecast"
-        return {"status": "error", "message": http_error_message(exc, kind)}
-    except json.JSONDecodeError as exc:
-        return {"status": "error", "message": f"invalid JSON request: {exc}"}
-    except TypeError as exc:  # bad/unknown parameters
-        return {"status": "error", "message": f"invalid parameters: {exc}"}
+        return http_error_message(exc, "history" if tool == "get_history" else "forecast")
+    if isinstance(exc, json.JSONDecodeError):
+        return f"invalid JSON request: {exc}"
+    if isinstance(exc, TypeError):  # bad/unknown parameters
+        return f"invalid parameters: {exc}"
+    # unexpected: the server keeps serving, the traceback goes to stderr
+    traceback.print_exception(exc, file=sys.stderr)
+    return f"internal error: {type(exc).__name__}: {exc}"
 
 
 # --- MCP JSON-RPC framing (the reference serves FastMCP over stdio,
@@ -263,12 +297,19 @@ def serve_stdio(spark: SparkSession, stdin: TextIO, stdout: TextIO) -> None:
             ) + "\n")
             stdout.flush()
             continue
-        if isinstance(req, dict) and req.get("jsonrpc") == "2.0":
-            resp = handle_rpc(spark, req)
-            if resp is None:
-                continue
-        else:
-            resp = handle_request(spark, req)
+        rpc = isinstance(req, dict) and req.get("jsonrpc") == "2.0"
+        try:
+            resp = handle_rpc(spark, req) if rpc else handle_request(spark, req)
+        except Exception as exc:  # one bad line must not end the session
+            traceback.print_exc(file=sys.stderr)
+            message = f"internal error: {type(exc).__name__}: {exc}"
+            resp = (
+                _rpc_error(req.get("id"), -32603, message)
+                if rpc
+                else {"status": "error", "message": message}
+            )
+        if resp is None:
+            continue
         stdout.write(json.dumps(resp) + "\n")
         stdout.flush()
 

@@ -109,8 +109,8 @@ def geocode(
     geo: DataFrame | None = None,
     transport=None,
 ):
-    """place → (location_id, lat, lon) via the broadcast geo dimension,
-    falling back to LIVE Nominatim when enabled.
+    """place → (location_id, lat, lon) via the geo dimension, falling
+    back to LIVE Nominatim when enabled.
 
     Resolution order mirrors the reference's free-text tolerance
     (Nominatim resolves "Paris, France", "paris" and "PARIS FRANCE"
@@ -125,53 +125,74 @@ def geocode(
     location for warehouse lookups.  A miss still raises, matching
     ``exactly_one=True`` → ``ValueError`` (server.py:110-114) — same
     error envelope either way.
+
+    The dimension is a handful of rows, so matching runs on the driver
+    with no Spark job: against ``fixtures.GEO_ROWS`` /
+    ``GEO_ALIAS_ROWS`` by default, or against the collected rows of an
+    injected ``geo`` frame (which has no alias table).
     """
-    from ..operators.joins import normalize_place_key
     from ..sources import live
 
-    default_dim = geo is None
-    geo = geo if geo is not None else fixtures.geo_dim(spark)
-    rows = geo.filter(F.col("place") == place).limit(2).collect()
-    if not rows and default_dim:
-        # alias table: 'Praha' / 'berlin germany' / 'WIEN' → canonical
-        alias = fixtures.geo_alias_dim(spark)
-        rows = alias.filter(
-            normalize_place_key(F.col("alias")) == normalize_place_key(F.lit(place))
-        ).limit(2).collect()
-    if not rows:
-        # last chance: normalized match on the dimension's own names
-        rows = geo.filter(
-            normalize_place_key(F.col("place")) == normalize_place_key(F.lit(place))
-        ).limit(2).collect()
-    if not rows:
-        if transport is not None or live.live_fetch_enabled():
-            try:
-                lat, lon = live.geocode_place(place, transport=transport)
-            except ValueError as exc:
-                raise ForecastRequestError(str(exc)) from exc
-            _validate_coord(lat, lon)
-            return _nearest_location_id(geo, lat, lon), lat, lon
-        raise ForecastRequestError(f"Could not find coordinates for {place!r}")
-    r = rows[0]
-    return r.location_id, r.latitude, r.longitude
+    if not isinstance(place, str):
+        raise ForecastRequestError(f"invalid place: {place!r}")
+    rows = _geo_rows(geo)
+    aliases = fixtures.GEO_ALIAS_ROWS if geo is None else ()
+    hit = _match_place(place, rows, aliases)
+    if hit is not None:
+        return hit
+    if transport is not None or live.live_fetch_enabled():
+        try:
+            lat, lon = live.geocode_place(place, transport=transport)
+        except ValueError as exc:
+            raise ForecastRequestError(str(exc)) from exc
+        _validate_coord(lat, lon)
+        return _nearest_location_id(rows, lat, lon), lat, lon
+    raise ForecastRequestError(f"Could not find coordinates for {place!r}")
 
 
-def _nearest_location_id(geo: DataFrame, lat: float, lon: float) -> int:
+def _geo_rows(geo: DataFrame | None) -> list[tuple]:
+    """``(place, location_id, latitude, longitude)`` per dimension row:
+    the fixture's rows, or an injected frame's, collected in order."""
+    if geo is None:
+        return [r[:4] for r in fixtures.GEO_ROWS]
+    return [
+        tuple(r)
+        for r in geo.select("place", "location_id", "latitude", "longitude").collect()
+    ]
+
+
+def _match_place(place: str, rows, aliases):
+    """First ``(location_id, lat, lon)`` whose name matches ``place``:
+    exact name, else normalized alias (``aliases`` rows are ``(alias,
+    place, location_id, lat, lon, ...)``), else normalized name."""
+    from ..operators.joins import normalize_place_text
+
+    for name, loc_id, lat, lon in rows:
+        if name == place:
+            return loc_id, lat, lon
+    key = normalize_place_text(place)
+    for alias, _, loc_id, lat, lon, *_ in aliases:
+        if normalize_place_text(alias) == key:
+            return loc_id, lat, lon
+    for name, loc_id, lat, lon in rows:
+        if name is not None and normalize_place_text(name) == key:
+            return loc_id, lat, lon
+    return None
+
+
+def _nearest_location_id(rows, lat: float, lon: float) -> int:
     """Snap an arbitrary coordinate to the nearest catalog location
     (the API's grid-point snap, WetIng.pdf p.1-2) — nearest by squared
-    degree distance, deterministic tie-break on location_id."""
-    cand = (
-        geo.withColumn(
-            "d2",
-            (F.col("latitude") - lat) ** 2 + (F.col("longitude") - lon) ** 2,
-        )
-        .orderBy("d2", "location_id")
-        .limit(1)
-        .collect()
-    )
+    degree distance, deterministic tie-break on location_id.  Rows
+    without coordinates never win."""
+    cand = [
+        ((r_lat - lat) ** 2 + (r_lon - lon) ** 2, loc_id)
+        for _, loc_id, r_lat, r_lon in rows
+        if r_lat is not None and r_lon is not None
+    ]
     if not cand:
         raise ForecastRequestError("empty geo dimension")
-    return cand[0].location_id
+    return min(cand)[1]
 
 
 def _validate_coord(lat: float, lon: float) -> None:
@@ -180,20 +201,32 @@ def _validate_coord(lat: float, lon: float) -> None:
         raise ForecastRequestError(f"invalid coordinates: ({lat}, {lon})")
 
 
+def _as_coord(name: str, value) -> float:
+    """A request's latitude/longitude as a float, or a request error
+    (booleans and non-numeric strings are not coordinates)."""
+    if not isinstance(value, bool):
+        try:
+            return float(value)
+        except (TypeError, ValueError):
+            pass
+    raise ForecastRequestError(f"invalid {name}: {value!r}")
+
+
 def _resolve_location(spark, place, latitude, longitude, geo):
     """place overrides explicit lat/lon (reference server.py:166,
     188-190); no location at all is an error (server.py:196-197)."""
     if place is not None:
         loc_id, lat, lon = geocode(spark, place, geo)
+        _validate_coord(lat, lon)
     elif latitude is not None and longitude is not None:
-        geo = geo if geo is not None else fixtures.geo_dim(spark)
-        lat, lon = float(latitude), float(longitude)
-        loc_id = _nearest_location_id(geo, lat, lon)
+        lat = _as_coord("latitude", latitude)
+        lon = _as_coord("longitude", longitude)
+        _validate_coord(lat, lon)
+        loc_id = _nearest_location_id(_geo_rows(geo), lat, lon)
     else:
         raise ForecastRequestError(
             "Either 'place' or both 'latitude' and 'longitude' must be provided"
         )
-    _validate_coord(lat, lon)
     return loc_id, lat, lon
 
 
@@ -266,21 +299,37 @@ def _check_variables(variables, known) -> None:
         raise ForecastRequestError(f"unknown variables: {unknown}")
 
 
-def _checked_source(spark, weather, native_15, gran, variables):
-    """Check ``variables`` — daily names against ``DAILY_VARIABLE_SPECS``,
-    sub-daily names against the source frame's columns — and return
-    the source frame when it had to be built for that check, else
-    None.  Building a fixture frame costs ~0.3 s of driver time, so a
-    request without sub-daily names (or with an unknown place) does
-    not pay it before its location resolves."""
-    if gran == 1440:
-        _check_variables(variables, DAILY_VARIABLE_SPECS)
-        return None
-    if not _as_list(variables):
-        return None
-    wh = _weather_source(spark, weather, native_15)
-    _check_variables(variables, wh.columns)
-    return wh
+#: the served fixture frames, one cached frame per (fixture,
+#: application, session time zone) — see ``_served_fixture``
+_SERVED: dict[tuple, DataFrame] = {}
+
+
+def _served_fixture(spark: SparkSession, build) -> DataFrame:
+    """``build(spark).cache()``, built once per SparkSession and reused
+    by every request, so a request pays neither the fixture's plan
+    construction nor its generation.
+
+    The key holds the session time zone because the fixture's
+    timestamps are cast from strings under it: a hostile-timezone
+    session never reads a frame generated under another zone.  The
+    fixture's own partitions are kept: coalescing before the cache
+    regroups a daily float sum across what were partition boundaries
+    and moves it by an ULP.  ``cache()`` is lazy (the first request's
+    action materializes it) and registers the plan in Spark's
+    CacheManager, so any later query over an identical default-argument
+    fixture plan reads this cache; only this module builds such plans.
+    A frame whose cache entry was dropped (``clearCache``, or an
+    ``unpersist`` of an identical plan) is cached again."""
+    app = spark.sparkContext.applicationId
+    key = (build.__name__, app, spark.conf.get("spark.sql.session.timeZone"))
+    df = _SERVED.get(key)
+    if df is None:
+        for stale in [k for k in _SERVED if k[1] != app]:
+            del _SERVED[stale]
+        df = _SERVED[key] = build(spark).cache()
+    elif not df.storageLevel.useMemory:
+        df.cache()
+    return df
 
 
 def _weather_source(spark, weather, native_15):
@@ -290,8 +339,8 @@ def _weather_source(spark, weather, native_15):
     if weather is not None:
         return weather
     if native_15:
-        return fixtures.weather_15min(spark)
-    return fixtures.weather_hourly(spark)
+        return _served_fixture(spark, fixtures.weather_15min)
+    return _served_fixture(spark, fixtures.weather_hourly)
 
 
 def get_forecast_blocks(
@@ -339,12 +388,11 @@ def get_forecast_blocks(
     # `daily_variables or variables or defaults` — a caller supplying
     # only `variables` still gets their selection at daily granularity
     vars_ = (daily_variables or variables) if gran == 1440 else variables
-    wh = _checked_source(spark, weather, native_15, gran, vars_)
+    wh = _weather_source(spark, weather, native_15)
+    _check_variables(vars_, DAILY_VARIABLE_SPECS if gran == 1440 else wh.columns)
     if gran != 1440:
         _check_variables(daily_variables, DAILY_VARIABLE_SPECS)
     loc_id, _, _ = _resolve_location(spark, place, latitude, longitude, geo)
-    if wh is None:
-        wh = _weather_source(spark, weather, native_15)
     horizon = filter_horizon_relative(
         wh, "ts", now, past_days=past_days, forecast_days=forecast_days
     )
@@ -364,7 +412,7 @@ def get_forecast_blocks(
             daily_src = horizon
         else:
             daily_src = filter_horizon_relative(
-                fixtures.weather_hourly(spark),
+                _weather_source(spark, None, False),
                 "ts",
                 now,
                 past_days=past_days,
@@ -444,9 +492,8 @@ def get_history(
     if sd > ed:
         raise ForecastRequestError("start_date must be <= end_date")
     gran = 1440 if granularity >= 1440 else granularity
-    wh = _checked_source(spark, weather, False, gran, variables)
+    wh = _weather_source(spark, weather, False)
+    _check_variables(variables, DAILY_VARIABLE_SPECS if gran == 1440 else wh.columns)
     loc_id, _, _ = _resolve_location(spark, place, latitude, longitude, geo)
-    if wh is None:
-        wh = _weather_source(spark, weather, False)
     ranged = filter_date_range(wh, "ts", sd, ed)
     return _materialize(ranged, gran, variables, loc_id, sort=sort)

@@ -3251,7 +3251,14 @@ def ivfpq_refined_apply_epochs(spark, ingest_path: str) -> DataFrame:
 
 def _resolve_salt_rows(salt_rows: int | None) -> int | None:
     """Resolve the hot-list threshold: explicit parameter wins, else
-    the ``WDS_LIST_SALT_ROWS`` env knob, else off (None)."""
+    the ``WDS_LIST_SALT_ROWS`` env knob, else off (None).
+
+    The threshold counts rows per list at LIVE-VECTOR granularity (one
+    row per live vector) for both stores: the compaction flows size one
+    hot-cid set from the live wide records and salt the codes store's
+    write with it too, although that store holds m rows per vector.  A
+    value tuned against per-list codes-store row counts therefore marks
+    lists hot at an m× higher effective threshold."""
     import os as _os
 
     if salt_rows is not None:
@@ -3291,7 +3298,11 @@ def _salted_cid_repartition(
 
     ``hot``: precomputed hot-cid list — when not None it is used
     verbatim (empty ⇒ plain repartition) and no sizing pass runs,
-    letting one count job serve several store writes."""
+    letting one count job serve several store writes.  Either way the
+    threshold is rows per list at live-vector granularity (see
+    ``_resolve_salt_rows``): the compaction flows pass one ``hot`` set,
+    sized from live vectors, to both the vectors and the codes write,
+    and the standalone callers pass one-row-per-vector records."""
     salt_rows = _resolve_salt_rows(salt_rows)
     if not salt_rows and hot is None:
         return df.repartition("cid")

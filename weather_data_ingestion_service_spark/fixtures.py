@@ -46,42 +46,49 @@ def _noise(seed_col, lo: float, hi: float) -> F.Column:
     return F.lit(lo) + u * (hi - lo)
 
 
-def geo_dim(spark: SparkSession) -> DataFrame:
-    """Geocoding dimension: place → location_id, lat/lon, timezone.
+#: the geocoding dimension's rows: (place, location_id, latitude,
+#: longitude, timezone).  Includes one out-of-range row to exercise
+#: ``filter_coord_range`` and the invalid-coordinate path (reference
+#: server.py:199-203).  The tool server resolves places against these
+#: rows on the driver; ``geo_dim`` is the same rows as a frame.
+GEO_ROWS: tuple[tuple, ...] = (
+    *((place, i, LATS[i], LONS[i], "UTC") for i, place in enumerate(PLACES)),
+    ("Nowhere, XX", 98, 123.0, 500.0, "UTC"),  # invalid coords
+)
 
-    Includes one out-of-range row and one unknown place to exercise
-    ``filter_coord_range`` and the geocode-miss path
-    (reference server.py:112-114, 199-203)."""
-    rows = [
-        (place, i, LATS[i], LONS[i], "UTC")
-        for i, place in enumerate(PLACES)
-    ]
-    rows.append(("Nowhere, XX", 98, 123.0, 500.0, "UTC"))  # invalid coords
+#: alias-expanded rows: (alias, place, location_id, latitude,
+#: longitude, timezone), one per accepted name (canonical + every
+#: ``PLACE_ALIASES`` entry).
+GEO_ALIAS_ROWS: tuple[tuple, ...] = tuple(
+    (alias, place, i, LATS[i], LONS[i], "UTC")
+    for i, place in enumerate(PLACES)
+    for alias in [place, *PLACE_ALIASES.get(place, [])]
+)
+
+
+def geo_dim(spark: SparkSession) -> DataFrame:
+    """Geocoding dimension: place → location_id, lat/lon, timezone
+    (``GEO_ROWS``)."""
     # Arrow local frame (io.local_frame, r14): createDataFrame slices
     # even a 6-row dim into defaultParallelism pickled partitions —
     # every broadcast of this dim re-ran a 32-partition Python scan
     from .io import local_frame
 
     return local_frame(
-        spark, rows,
+        spark, list(GEO_ROWS),
         "place string, location_id long, latitude double, longitude double, timezone string",
     )
 
 
 def geo_alias_dim(spark: SparkSession) -> DataFrame:
-    """Alias-expanded geocoding dimension: one row per accepted name
-    (canonical + every ``PLACE_ALIASES`` entry), each carrying its
-    canonical place's id/coordinates.  Feed to
-    ``operators.joins.geocode_lookup_fuzzy`` for free-text
+    """Alias-expanded geocoding dimension (``GEO_ALIAS_ROWS``): each
+    accepted name carries its canonical place's id/coordinates.  Feed
+    to ``operators.joins.geocode_lookup_fuzzy`` for free-text
     resolution."""
-    rows = []
-    for i, place in enumerate(PLACES):
-        for alias in [place, *PLACE_ALIASES.get(place, [])]:
-            rows.append((alias, place, i, LATS[i], LONS[i], "UTC"))
     from .io import local_frame
 
     return local_frame(
-        spark, rows,
+        spark, list(GEO_ALIAS_ROWS),
         "alias string, place string, location_id long, "
         "latitude double, longitude double, timezone string",
     )

@@ -7,6 +7,7 @@ deliberate physical shape at 100 TB.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -45,6 +46,17 @@ def normalize_place_key(c: Column | str) -> Column:
     c = F.lower(c)
     c = F.regexp_replace(c, "[^a-z0-9 ]", " ")
     return F.trim(F.regexp_replace(c, " +", " "))
+
+
+def normalize_place_text(text: str) -> str:
+    """Driver-side twin of :func:`normalize_place_key` for one string,
+    for resolvers that match a request against a handful of rows
+    without a Spark job.  Every character outside ``[a-z0-9 ]`` after
+    lowercasing becomes a space, so Python's and the JVM's Unicode
+    case tables need only agree on which characters lowercase into
+    ASCII (a property test pins the two against each other)."""
+    text = re.sub("[^a-z0-9 ]", " ", text.lower())
+    return re.sub(" +", " ", text).strip(" ")
 
 
 def geocode_lookup_fuzzy(
