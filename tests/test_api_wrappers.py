@@ -590,6 +590,78 @@ class TestStdioServe:
                         "message": f"unknown variables: {unknown}"}
         assert jobs == []
 
+    @pytest.mark.parametrize(
+        "tool,params,unknown",
+        [
+            ("get_forecast", {"now": "2024-01-03 00:00:00"}, ["now"]),
+            ("get_forecast", {"weather": "x"}, ["weather"]),
+            ("get_forecast", {"sort": False, "geo": "x"}, ["geo", "sort"]),
+            ("get_history", {"start_date": "2024-01-02", "end_date": "2024-01-03",
+                             "now": "2024-01-03 00:00:00"}, ["now"]),
+        ],
+        ids=["now", "weather", "geo_sort", "history_now"],
+    )
+    def test_unknown_parameters_error_before_any_job(self, spark, tool, params, unknown):
+        """Only the keys of the tool's advertised input schema reach the
+        engine: internal keyword arguments (``now``, ``weather``,
+        ``geo``, ``sort``) are an error envelope, and no job runs."""
+        resp, jobs = self._jobs_in_group(
+            spark,
+            "wds-test-unknown-parameters",
+            {"tool": tool, "params": {"place": "Prague, CZ", **params}},
+        )
+        assert resp == {"status": "error",
+                        "message": f"unknown parameters: {unknown}"}
+        assert jobs == []
+
+    @pytest.mark.parametrize(
+        "name,value",
+        [
+            ("past_days", 1_000_000_000),
+            ("past_days", 93),
+            ("past_days", -1),
+            ("past_days", True),
+            ("past_days", 1.5),
+            ("past_days", "3"),
+            ("forecast_days", -2),
+            ("forecast_days", False),
+            ("forecast_days", 2.0),
+        ],
+    )
+    def test_horizon_params_are_range_checked(self, spark, name, value):
+        """past_days / forecast_days that are not non-negative integers,
+        or a past_days above Open-Meteo's 92, answer a request error
+        naming the parameter before any job runs — not an internal
+        OverflowError from the window arithmetic."""
+        resp, jobs = self._jobs_in_group(
+            spark,
+            "wds-test-horizon-range",
+            {"tool": "get_forecast",
+             "params": {"place": "Prague, CZ", name: value}},
+        )
+        assert resp["status"] == "error"
+        assert resp["message"].startswith(f"invalid {name}: {value!r}"), resp
+        assert jobs == []
+
+    @pytest.mark.parametrize(
+        "params,hours",
+        [
+            ({"past_days": 92, "forecast_days": 1}, None),
+            ({"past_days": None, "forecast_days": 2}, 2 * 24),
+            ({"forecast_days": 20}, None),
+        ],
+        ids=["past_days_92", "null_past_days", "forecast_days_20_clamped"],
+    )
+    def test_horizon_params_in_range_are_served(self, spark, params, hours):
+        from weather_data_ingestion_service_spark.api.serve import handle_request
+
+        resp = handle_request(
+            spark, {"tool": "get_forecast", "params": {"place": "Prague, CZ", **params}}
+        )
+        assert resp["status"] == "success", resp
+        if hours is not None:
+            assert len(resp["data"]["hourly"]["time"]) == hours
+
     def test_valid_request_jobs_are_seen_by_its_group(self, spark):
         """Control for the no-job assertion above: the same job-group
         probe does see a valid request's jobs."""

@@ -4010,3 +4010,241 @@ class TestKmeansMultiArrow:
                 want[int(r["cid"]), int(r["dim"])] = int(r["c_fix"])
             assert (fused[s] == want).all(), f"subspace {s} diverged"
         q256.unpersist()
+
+
+# --- JVM reference for the ADC score kernel: the Spark probe + window,
+# --- literal-map decode and higher-order ADC chain the md5 PQ family
+# --- scored with before the Arrow kernel replaced them.
+
+
+def _ref_probe_lists(queries, cent, nprobe):
+    """Queries → their ``nprobe`` nearest lists under (cos DESC, cid ASC)."""
+    from pyspark.sql import Window
+
+    from weather_data_ingestion_service_spark.ext.simsearch import _codebook_cos
+
+    probes = (
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("cos_c", _codebook_cos("qvec", "ce"))
+    )
+    wp = Window.partitionBy("query_id").orderBy(F.col("cos_c").desc(), F.col("cid").asc())
+    return (
+        probes.withColumn("rn", F.row_number().over(wp))
+        .filter(F.col("rn") <= nprobe)
+        .select("query_id", "qvec", "cid")
+    )
+
+
+def _ref_adc_topk(probes, codes, cb_rows, k, m, sub, on="cid", lead=False):
+    from weather_data_ingestion_service_spark.ext.simsearch import (
+        _adc_subspace_dot,
+        _dot,
+        _literal_vec_map,
+        _rank_topk,
+    )
+
+    keep = ["match_id"] + ([on] if on else [])
+    dec = codes.select(
+        *keep,
+        *[
+            F.element_at(
+                _literal_vec_map(cb_rows, s * sub, (s + 1) * sub), F.col(f"c{s}")
+            ).alias(f"cv{s}")
+            for s in range(m)
+        ],
+    )
+    cand = probes.join(dec, on) if on else F.broadcast(probes).crossJoin(dec)
+    terms = [_adc_subspace_dot(s, sub) for s in range(m)]
+    adc = terms[0]
+    if lead:
+        coarse = _literal_vec_map(cb_rows, 0, m * sub)
+        adc = _dot(F.col("qvec"), F.element_at(coarse, F.col("cid"))) + adc
+    for t in terms[1:]:
+        adc = adc + t
+    scored = cand.filter(F.col("query_id") != F.col("match_id")).withColumn("adc", adc)
+    return _rank_topk(scored, "adc", k)
+
+
+class TestAdcScoreKernel:
+    """``ivfpq_score_codes`` + ``_probe_local`` against the JVM
+    reference above, bit for bit, on adversarial codebooks and
+    queries: tied adc values (duplicate codes), −0.0 components, zero,
+    inf and NaN query vectors (NaN cosines in the probe; NaN and ±inf
+    adc), ``k`` above the candidate count, and a query whose probed
+    list holds only itself."""
+
+    DIM, M = 12, 3  # sub = 4: the fold order inside a subspace shows
+    LONELY = 500  # the only code in list 20, and a query probing list 20 alone
+
+    def _codebook(self):
+        import numpy as np
+
+        rng = np.random.default_rng(7)
+        book = [(c, [float(x) for x in rng.normal(size=self.DIM).astype(np.float32)]) for c in (3, 7, 11)]
+        book[0][1][1] = book[1][1][0] = book[2][1][4] = -0.0
+        return book + [(20, [0.0] * (self.DIM - 1) + [1.0])]
+
+    def _inputs(self, spark):
+        import numpy as np
+
+        from weather_data_ingestion_service_spark.io import local_frame
+
+        rng = np.random.default_rng(11)
+        cids = [3, 7, 11, 20]
+        rows = [
+            (i, int(rng.choice(cids[:3])), *[int(rng.choice(cids)) for _ in range(self.M)])
+            for i in range(30)
+        ]
+        rows += [(30 + i, *rows[i][1:]) for i in range(10)]  # tied adc
+        rows.append((self.LONELY, 20, *[int(rng.choice(cids)) for _ in range(self.M)]))
+        codes = spark.createDataFrame(
+            rows, "match_id long, cid long, " + ", ".join(f"c{s} long" for s in range(self.M))
+        ).repartition(3)
+
+        def normal():
+            # magnitudes 1e-6..1e6 make every fold-order change visible
+            x = rng.normal(size=self.DIM) * 10.0 ** rng.integers(-6, 7, size=self.DIM)
+            return [float(v) for v in x.astype(np.float32)]
+
+        qv = {0: normal(), 5: normal(), 31: normal(), 100: [0.0] * self.DIM,
+              101: [-0.0] * self.DIM, 102: normal(), 103: normal(),
+              self.LONELY: [0.0] * (self.DIM - 1) + [1.0]}
+        qv[0][2] = qv[0][5] = -0.0
+        # inf × 0.0 (list 20's zeros) is NaN for some codes and −inf
+        # for others: NaN must rank first
+        qv[102][1] = float("inf")
+        qv[103][1] = float("nan")
+        queries = spark.createDataFrame(
+            sorted(qv.items()), "vec_id long, embedding array<float>"
+        )
+        cent = local_frame(spark, self._codebook(), "cid long, ce array<float>")
+        cb_rows = sorted(cent.collect(), key=lambda r: r["cid"])
+        return codes, queries, cent, cb_rows
+
+    @staticmethod
+    def _bits(df):
+        return sorted(
+            (r.query_id, r.match_id, float(r.adc).hex(), r.rank) for r in df.collect()
+        )
+
+    @pytest.mark.parametrize(
+        "nprobe,lead,k",
+        [(1, False, 3), (2, True, 5), (3, False, 4), (None, False, 60)],
+        ids=["nprobe1", "nprobe2_lead", "nprobe3", "every_list_k_above_candidates"],
+    )
+    def test_kernel_matches_jvm_reference_bitwise(self, spark, nprobe, lead, k):
+        from weather_data_ingestion_service_spark.ext import simsearch
+
+        codes, queries, cent, cb_rows = self._inputs(spark)
+        q = simsearch._local_queries(queries, "vec_id", "embedding", self.DIM)
+        probed = None if nprobe is None else simsearch._probe_local(q[1], cb_rows, nprobe)
+        got = self._bits(
+            simsearch._adc_topk(q, codes, cb_rows, k, self.M, probed=probed, lead=lead)
+        )
+        # ANSI division raises on the zero queries' 0/0 cosine (the mode
+        # is fixed when a frame is built); without ANSI it is NULL, and
+        # an all-NULL row ranks by cid alone, like the kernel's all-NaN row
+        ansi = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            if nprobe is None:
+                probes = queries.select(
+                    F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+                )
+                on = None
+            else:
+                probes = _ref_probe_lists(queries, cent, nprobe)
+                on = "cid"
+                cids = [r["cid"] for r in cb_rows]
+                assert sorted(
+                    (int(qid), cids[j]) for qid, row in zip(q[0], probed) for j in row.nonzero()[0]
+                ) == sorted((r.query_id, r.cid) for r in probes.collect())
+            want = self._bits(
+                _ref_adc_topk(
+                    probes, codes, cb_rows, k, self.M, self.DIM // self.M, on=on, lead=lead
+                )
+            )
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+        assert got == want
+        # the adversarial cases are really in the answer
+        assert any(a == "nan" for _q, _m, a, _r in want)
+        by_q = {}
+        for qid, mid, _a, _r in want:
+            by_q.setdefault(qid, []).append(mid)
+        if nprobe == 1:
+            assert self.LONELY not in by_q  # its one probed list holds only itself
+        if nprobe is None:
+            assert len(by_q[100]) == 41  # k above the candidate count: every code
+            by_rank = {r: a for qid, _m, a, r in want if qid == 102}
+            assert by_rank[1] == "nan" and "-inf" in by_rank.values()
+
+    def test_probe_matches_spark_window_with_nan_cosines(self, spark):
+        """A centroid with a NaN component has a NaN cosine to every
+        query; Spark's (cos DESC, cid ASC) order ranks it FIRST."""
+        from weather_data_ingestion_service_spark.ext import simsearch
+        from weather_data_ingestion_service_spark.io import local_frame
+
+        book = self._codebook()
+        book[2][1][3] = float("nan")
+        cent = local_frame(spark, book, "cid long, ce array<float>")
+        _codes, queries, _cent, _rows = self._inputs(spark)
+        queries = queries.filter(~F.col("vec_id").isin(100, 101))  # no 0/0
+        q = simsearch._local_queries(queries, "vec_id", "embedding", self.DIM)
+        rows = sorted(cent.collect(), key=lambda r: r["cid"])
+        for nprobe in (1, 2):
+            probed = simsearch._probe_local(q[1], rows, nprobe)
+            got = sorted(
+                (int(qid), book[j][0]) for qid, row in zip(q[0], probed) for j in row.nonzero()[0]
+            )
+            want = sorted(
+                (r.query_id, r.cid) for r in _ref_probe_lists(queries, cent, nprobe).collect()
+            )
+            assert got == want
+            assert (5, 11) in got
+
+    def _corpus(self, spark):
+        import numpy as np
+
+        rng = np.random.default_rng(3)
+        return spark.createDataFrame(
+            [(i, [float(x) for x in rng.normal(size=self.DIM)]) for i in range(40)],
+            "vec_id long, embedding array<float>",
+        )
+
+    def test_zero_row_queries_give_empty_frame(self, spark):
+        from weather_data_ingestion_service_spark.ext.simsearch import ivfpq_topk_md5
+
+        corpus = self._corpus(spark)
+        out = ivfpq_topk_md5(
+            corpus, corpus.limit(0), k=3, n_clusters=4, nprobe=2, m=self.M, dim=self.DIM
+        )
+        assert out.dtypes == [
+            ("query_id", "bigint"), ("match_id", "bigint"), ("adc", "double"), ("rank", "int"),
+        ]
+        assert out.collect() == []
+
+    @pytest.mark.parametrize("bad", [None, [0.5] * 7], ids=["null", "len7"])
+    def test_bad_query_vector_raises(self, spark, bad):
+        from weather_data_ingestion_service_spark.ext.simsearch import ivfpq_topk_md5
+
+        corpus = self._corpus(spark)
+        queries = spark.createDataFrame(
+            [(1, [0.5] * self.DIM), (2, bad)], "vec_id long, embedding array<float>"
+        )
+        with pytest.raises(ValueError, match=rf"ivfpq_score_codes: .*expected dim={self.DIM}"):
+            ivfpq_topk_md5(
+                corpus, queries, k=3, n_clusters=4, nprobe=2, m=self.M, dim=self.DIM
+            ).collect()
+
+    def test_code_outside_the_codebook_raises(self, spark):
+        from weather_data_ingestion_service_spark.ext import simsearch
+
+        _codes, queries, _cent, cb_rows = self._inputs(spark)
+        codes = spark.createDataFrame(
+            [(1, 3, 7, 999, 11)], "match_id long, cid long, c0 long, c1 long, c2 long"
+        )
+        q = simsearch._local_queries(queries, "vec_id", "embedding", self.DIM)
+        with pytest.raises(Exception, match="ivfpq_score_codes: c1 value"):
+            simsearch._adc_topk(q, codes, cb_rows, 3, self.M).collect()

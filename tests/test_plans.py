@@ -805,14 +805,13 @@ def test_ivfpq_index_query_prunes_code_lists(spark, sf_dir):
     probed-list filter at PLANNING time — PartitionFilters on the
     coarse ``cid`` partition column (the inverted-list layout read),
     and the plan must contain NO re-encode of the corpus (the min_by/
-    max_by encode aggregate belongs to the build half only).  At
-    100 TB this is nprobe/n_clusters of the index directories read,
-    with m+1 small ints per vector."""
+    max_by encode aggregate belongs to the build half only).  Scoring
+    is the one ``ivfpq_score_codes`` MapInArrow: no queries × codes
+    nested-loop join and no literal ``map(`` decode.  At 100 TB this
+    is nprobe/n_clusters of the index directories read, with m+1
+    small ints per vector."""
     import re
 
-    # the registry entry eagerly localCheckpoints (cache hygiene,
-    # ADVICE r10), which hides the serving plan behind a LogicalRDD —
-    # assert on the LAZY plan via eager=False instead
     from pyspark.sql import functions as F
 
     from weather_data_ingestion_service_spark.ext.simsearch import (
@@ -826,13 +825,48 @@ def test_ivfpq_index_query_prunes_code_lists(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     df = ivfpq_query_index(
         spark, path, emb.filter(F.col("vec_id") < 5), "vec_id",
-        "embedding", k=3, nprobe=4, m=8, eager=False,
+        "embedding", k=3, nprobe=4, m=8,
     )
     plan = formatted_plan(df)
-    spark.catalog.clearCache()  # eager=False leaves the probe cache
     pf = re.search(r"PartitionFilters: \[(.*?)\]", plan)
     assert pf and "cid" in pf.group(1), plan[-2000:]
     assert "min_by" not in plan and "max_by" not in plan, plan[-2000:]
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan[-2000:]
+    assert "BroadcastNestedLoopJoin" not in plan, plan[-2000:]
+    assert "map(" not in plan, plan[-2000:]
+
+
+def test_ivfpq_index_query_job_count(spark, sf_dir):
+    """A warm ext_simsearch_index_query — build plus a noop write —
+    runs at most 8 Spark jobs (13 before the probe moved to the driver
+    and scoring to one Arrow kernel)."""
+    from weather_data_ingestion_service_spark.registry_r10 import (
+        _ensure_ivfpq_index,
+    )
+
+    _ensure_ivfpq_index(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "wds-test-index-query-jobs"
+    sc.setJobGroup(group, "test_plans")
+    try:
+        QS["ext_simsearch_index_query"](spark, sf_dir).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 8, jobs
+
+
+def test_ivfpq_residual_runs_pass_one_once(spark, sf_dir):
+    """ext_simsearch_ivfpq_residual: the pass-1 encode feeds the
+    residual only (pass 2 carries its cid), so the plan holds exactly
+    two encode MapInArrow nodes plus the score kernel."""
+    import re
+
+    plan = formatted_plan(QS["ext_simsearch_ivfpq_residual"](spark, sf_dir))
+    nodes = re.findall(r"\(\d+\) MapInArrow\n.*\nArguments: (\w+)\(", plan)
+    assert sorted(nodes) == ["encode", "encode", "score"], plan[-3000:]
 
 
 def test_refined_index_serve_prunes_codes_and_vectors(spark, sf_dir):

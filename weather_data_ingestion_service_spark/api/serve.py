@@ -137,6 +137,11 @@ def _dispatch(spark, request) -> tuple[dict, Any, str | None]:
         if fn is None:
             raise ForecastRequestError(f"unknown tool: {tool!r}")
         params = dict(req.get("params") or {})
+        # only the advertised schema reaches the engine: keyword
+        # arguments such as ``now`` or ``weather`` are not wire inputs
+        unknown = sorted(set(params) - set(_TOOL_SCHEMAS[tool]["properties"]))
+        if unknown:
+            raise ForecastRequestError(f"unknown parameters: {unknown}")
         result = fn(spark, **params)
         if isinstance(result, dict):
             blocks = result

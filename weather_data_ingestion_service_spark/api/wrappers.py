@@ -69,6 +69,26 @@ class ForecastRequestError(ValueError):
     before any job runs."""
 
 
+#: Open-Meteo's documented ``past_days`` range is 0-92
+#: (https://open-meteo.com/en/docs)
+MAX_PAST_DAYS = 92
+
+
+def _horizon_days(name: str, value, cap: int | None = None) -> int | None:
+    """A request's ``past_days`` / ``forecast_days`` checked at bind
+    time: ``None`` (JSON null) passes through; a bool, a non-integer,
+    a negative value or one above ``cap`` is a request error naming
+    the parameter."""
+    if value is None:
+        return None
+    if isinstance(value, bool) or not isinstance(value, int):
+        raise ForecastRequestError(f"invalid {name}: {value!r}")
+    if value < 0 or (cap is not None and value > cap):
+        limit = f"0-{cap}" if cap is not None else ">= 0"
+        raise ForecastRequestError(f"invalid {name}: {value!r} (expected {limit})")
+    return value
+
+
 def http_error_message(err: Exception, tool: str = "forecast") -> str:
     """Reference-shaped failure message for a source fetch error
     (server.py:258-280 for forecast, 363-369 for history).
@@ -376,6 +396,10 @@ def get_forecast_blocks(
     """
     if granularity not in (15, 60) and granularity < 1440:
         raise ForecastRequestError(f"unsupported granularity: {granularity}")
+    # forecast_days above 16 is clamped below (the reference's limit);
+    # a null past_days means none
+    forecast_days = _horizon_days("forecast_days", forecast_days)
+    past_days = _horizon_days("past_days", past_days, MAX_PAST_DAYS) or 0
     # server.py:236-249 horizon-default branch: 7-day default injected
     # only when NEITHER horizon was caller-specified; otherwise the
     # upstream default applies (see resolve_horizon_params).

@@ -302,7 +302,8 @@ def ivf_topk_md5(
     Every step downstream is the exact IVF shape: one full-corpus
     assignment pass (the coarse ``cid`` of the ``ivfpq_encode_codes``
     kernel, whose cosine is bit-identical to the JVM expression),
-    queries probe ``nprobe`` centroids, exact cosine re-rank inside the
+    queries probe ``nprobe`` centroids on the driver (``_probe_local``,
+    shared with the IVF-PQ paths), exact cosine re-rank inside the
     probed inverted lists under the (cos DESC, id) total order.  The
     cosine expression is kept IDENTICAL on assignment and re-rank (no
     norm-hoisting shortcut) so the oracle can reproduce every
@@ -313,6 +314,10 @@ def ivf_topk_md5(
     ``cent`` injects an external coarse quantizer (``cid``, ``ce``
     rows — e.g. the certified fixed-point KMeans centroids); by
     default the hash-sampled codebook derives from the corpus."""
+    from pyspark.sql import types as T
+
+    from ..io import local_frame
+
     cent, rows = _local_codebook(corpus, id_col, vec_col, n_clusters, cent)
     dim = len(rows[0]["ce"]) if rows else 0
     # only the coarse cid is used: m=1 keeps the unused code pass to
@@ -326,9 +331,25 @@ def ivf_topk_md5(
         ),
         "match_id",
     )
+    qids, Q = _local_queries(queries, id_col, vec_col, dim, "ivf_topk_md5")
+    probed = _probe_local(Q, rows, nprobe)
+    probes = local_frame(
+        corpus.sparkSession,
+        [
+            (int(qid), [float(v) for v in Q[i]], int(rows[j]["cid"]))
+            for i, qid in enumerate(qids)
+            for j in probed[i].nonzero()[0]
+        ],
+        T.StructType(
+            [
+                T.StructField("query_id", T.LongType()),
+                T.StructField("qvec", queries.schema[vec_col].dataType),
+                T.StructField("cid", T.LongType()),
+            ]
+        ),
+    )
     scored = (
-        _probe_lists(queries, cent, id_col, vec_col, nprobe)
-        .join(assign, "cid")
+        probes.join(assign, "cid")
         .filter(F.col("query_id") != F.col("match_id"))
         .withColumn("cosine", _codebook_cos("qvec", "cvec"))
     )
@@ -360,15 +381,13 @@ def pq_topk_md5(
     grouped rows, whose accumulation order neither engine guarantees.
     Codes are m small ints per vector (the 8×4-bit = 4-byte
     compression that lets 100 TB of vectors live in RAM); PQ-flat by
-    design: the broadcast queries score every code."""
+    design: the collected queries score every code."""
     cent, rows = _local_codebook(corpus, id_col, vec_col, n_cent)
     codes = ivfpq_encode_codes(
         corpus, id_col, vec_col, n_cent, m, dim, cent=cent
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    return _adc_topk(q, codes, rows, k, m, dim // m, on=None)
+    q = _local_queries(queries, id_col, vec_col, dim)
+    return _adc_topk(q, codes, rows, k, m)
 
 
 def pq_topk_trained(
@@ -485,29 +504,6 @@ def _codebook_cos(a, b):
     return _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
 
 
-def _probe_lists(queries, cent, id_col, vec_col, nprobe):
-    """Queries → their ``nprobe`` nearest coarse lists under the
-    (cos DESC, cid ASC) total order (shared by the IVF-PQ twins so the
-    probe stage cannot drift between them)."""
-    from pyspark.sql import Window
-
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        )
-        .crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", _codebook_cos("qvec", "ce"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cos_c").desc(), F.col("cid").asc()
-    )
-    return (
-        probes.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qvec", "cid")
-    )
-
-
 def _link_or_copy(src: str, dst: str) -> None:
     """Hardlink ``src`` to ``dst``; fall back to a byte copy when the
     two paths live on different filesystems (``EXDEV`` — object-store
@@ -589,40 +585,161 @@ def _literal_vec_map(cb_rows, lo, hi):
     )
 
 
-def _adc_topk(probes, codes, cb_rows, k, m, sub, on="cid", lead=None):
-    """Decode → ADC → rank: the one scoring tail of the md5 PQ family
-    (``pq_topk_md5``, ``ivfpq_topk_md5``, the residual twin and the
-    persisted ``ivfpq_query_index``).
+def _codebook_arrays(cb_rows):
+    """Codebook rows sorted by cid → ``(cids int64, C float64 (n, dim))``
+    — the closure form every codebook kernel ships (float → double is
+    exact, so ``C`` holds the codebook's own values)."""
+    import numpy as np
 
-    ``codes`` carries ``(match_id, c0..c{m-1})`` plus the join key
-    ``on``; each code decodes JVM-side through a per-subspace literal
-    map ``cid → centroid slice`` (``_literal_vec_map``).  Candidates
-    are ``probes ⋈ codes`` on ``on`` — or, with ``on=None``, the
-    broadcast query side × every code (PQ-flat).  ADC is the
-    FIXED-ORDER chain ``[lead +] d_0 + … + d_{m−1}`` of per-subspace
-    dots (never a grouped float SUM, whose accumulation order neither
-    engine guarantees), ranked under (adc DESC, match_id ASC), so a
-    DuckDB oracle reproduces every comparison bit-for-bit."""
-    keep = ["match_id"] + ([on] if on else [])
-    dec = codes.select(
-        *keep,
-        *[
-            F.element_at(
-                _literal_vec_map(cb_rows, s * sub, (s + 1) * sub),
-                F.col(f"c{s}"),
-            ).alias(f"cv{s}")
-            for s in range(m)
-        ],
+    cids = np.array([int(r["cid"]) for r in cb_rows], dtype=np.int64)
+    C = np.array([[float(v) for v in r["ce"]] for r in cb_rows], dtype=np.float64)
+    return cids, C
+
+
+def _local_queries(queries, id_col, vec_col, dim, fn="ivfpq_score_codes"):
+    """The query side collected to the driver as ``(query ids int64,
+    (n, dim) float64 vectors)`` — the probe's and the score kernel's
+    closure input.  A NULL or ragged vector raises a ``ValueError``
+    naming ``fn`` (by default the score kernel) and ``dim``."""
+    import numpy as np
+
+    tbl = queries.select(
+        F.col(id_col).cast("long").alias("query_id"),
+        F.col(vec_col).alias("qvec"),
+    ).toArrow()
+    vecs = tbl.column("qvec").combine_chunks()
+    _vector_check(dim, fn)(vecs)
+    qids = np.asarray(tbl.column("query_id").to_numpy(), dtype=np.int64)
+    Q = np.asarray(vecs.flatten(), dtype=np.float64).reshape(len(qids), dim)
+    return qids, Q
+
+
+def _probe_local(Q, cb_rows, nprobe):
+    """Driver-side probe: each query's ``nprobe`` nearest coarse lists
+    as a ``(n_queries, n_lists)`` bool mask over the cid-sorted
+    codebook.  Cosine accumulates in the encode kernel's ascending-i
+    fold order (bit-identical to the JVM ``_codebook_cos``), ranked
+    under Spark's (cos DESC with NaN first, cid ASC) order.  A zero
+    query's 0/0 row is all NaN and probes the ``nprobe`` smallest cids."""
+    import numpy as np
+
+    _cids, C = _codebook_arrays(cb_rows)
+    nq, ncl = len(Q), len(C)
+    dot = np.zeros((nq, ncl))
+    nx = np.zeros(nq)
+    nc = np.zeros(ncl)
+    with np.errstate(all="ignore"):  # IEEE NaN/inf, as in the JVM
+        for i in range(C.shape[1]):
+            dot += Q[:, i, None] * C[None, :, i]
+            nx += Q[:, i] * Q[:, i]
+            nc += C[:, i] * C[:, i]
+        cos = dot / (np.sqrt(nx)[:, None] * np.sqrt(nc)[None, :])
+    nan = np.isnan(cos)
+    pos = np.broadcast_to(np.arange(ncl), (nq, ncl))
+    order = np.lexsort((pos, -np.where(nan, 0.0, cos), ~nan), axis=-1)
+    probed = np.zeros((nq, ncl), dtype=bool)
+    np.put_along_axis(probed, order[:, :nprobe], True, axis=1)
+    return probed
+
+
+def ivfpq_score_codes(codes, cb_rows, queries, k, m, probed=None, lead=False):
+    """ADC score kernel — the scoring twin of ``ivfpq_encode_codes``:
+    ONE narrow ``mapInArrow`` pass over ``(match_id, cid, c0..c{m-1})``
+    codes with the codebook, the collected ``queries`` (``(ids,
+    vectors)`` from ``_local_queries``) and each query's probed-list
+    mask (``probed``; ``None`` = every list) in the closure.  Each
+    Arrow batch emits its own top-``k`` per query under (adc DESC with
+    NaN first, match_id ASC), self-matches skipped; ``_rank_topk``
+    merges the partial lists (``_adc_topk``).
+
+    ADC is the FIXED-ORDER chain ``[lead +] d_0 + … + d_{m−1}``, each
+    ``d_s = 0.0 + q_i·c_i`` folded over ascending i (the JVM
+    ``zip_with``/``aggregate`` order; never a grouped float SUM, whose
+    accumulation order neither engine guarantees), so the DuckDB
+    oracles reproduce every score bit-for-bit.  ``lead`` adds the
+    residual twin's ``dot(q, coarse[cid])`` term, folded over the full
+    vector the same way."""
+    import numpy as np
+    import pyarrow as pa
+
+    cids, C = _codebook_arrays(cb_rows)
+    qids, Q = queries
+    nq, ncl, dim = len(qids), len(cids), C.shape[1]
+    sub = dim // m
+    mask = np.ones((nq, ncl), dtype=bool) if probed is None else probed
+    # bound the (queries × rows) score matrices to ~1M doubles
+    block = max(1, (1 << 20) // max(nq, 1))
+    out_schema = pa.schema(
+        [
+            pa.field("query_id", pa.int64()),
+            pa.field("match_id", pa.int64()),
+            pa.field("adc", pa.float64()),
+        ]
     )
-    cand = probes.join(dec, on) if on else F.broadcast(probes).crossJoin(dec)
-    terms = [_adc_subspace_dot(s, sub) for s in range(m)]
-    adc = terms[0] if lead is None else lead + terms[0]
-    for t in terms[1:]:
-        adc = adc + t
-    scored = cand.filter(F.col("query_id") != F.col("match_id")).withColumn(
-        "adc", adc
+
+    def positions(batch, j):
+        # cid values → codebook row positions (cids are sorted)
+        col = batch.column(j).to_numpy(zero_copy_only=False).astype(np.int64)
+        pos = np.minimum(np.searchsorted(cids, col), ncl - 1)
+        if not (cids[pos] == col).all():
+            name = batch.schema.names[j]
+            raise ValueError(f"ivfpq_score_codes: {name} value(s) not in the codebook")
+        return pos
+
+    def topk(mids, cpos, codes_pos):
+        adc = None
+        if lead:
+            L = np.zeros((nq, len(mids)))
+            for i in range(dim):
+                L += Q[:, i, None] * C[None, cpos, i]
+            adc = L
+        for s in range(m):
+            base = s * sub
+            d = np.zeros((nq, len(mids)))
+            for i in range(sub):
+                d += Q[:, base + i, None] * C[None, codes_pos[s], base + i]
+            adc = d if adc is None else adc + d
+        qi, j = np.nonzero(mask[:, cpos] & (qids[:, None] != mids[None, :]))
+        a = adc[qi, j]
+        mid = mids[j]
+        nan = np.isnan(a)
+        # qi-major, then (adc DESC with NaN first — Spark's NaN-greatest
+        # order, −0.0 == 0.0 — then match_id ASC)
+        order = np.lexsort((mid, -np.where(nan, 0.0, a), ~nan, qi))
+        qi, mid, a = qi[order], mid[order], a[order]
+        keep = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
+        return pa.RecordBatch.from_arrays(
+            [pa.array(qids[qi[keep]]), pa.array(mid[keep]), pa.array(a[keep])],
+            schema=out_schema,
+        )
+
+    def score(batches):
+        for batch in batches:
+            if batch.num_rows == 0 or nq == 0:
+                continue
+            mids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            cpos = positions(batch, 1)
+            codes_pos = [positions(batch, 2 + s) for s in range(m)]
+            for lo in range(0, len(mids), block):
+                hi = lo + block
+                with np.errstate(all="ignore"):  # IEEE NaN/inf, as in the JVM
+                    out = topk(mids[lo:hi], cpos[lo:hi], [p[lo:hi] for p in codes_pos])
+                yield out
+
+    return codes.select(
+        "match_id", "cid", *[f"c{s}" for s in range(m)]
+    ).mapInArrow(score, "query_id long, match_id long, adc double")
+
+
+def _adc_topk(queries, codes, cb_rows, k, m, probed=None, lead=False):
+    """Score → merge: the one scoring tail of the md5 PQ family
+    (``pq_topk_md5``, ``ivfpq_topk_md5``, the residual twin and the
+    persisted ``ivfpq_query_index``) — each batch's top-k from the
+    ``ivfpq_score_codes`` kernel, merged by ``_rank_topk`` under
+    (adc DESC, match_id ASC)."""
+    return _rank_topk(
+        ivfpq_score_codes(codes, cb_rows, queries, k, m, probed, lead), "adc", k
     )
-    return _rank_topk(scored, "adc", k)
 
 
 def ivfpq_topk_md5(
@@ -651,14 +768,15 @@ def ivfpq_topk_md5(
     ``ivfpq_encode_codes`` pass yields coarse assignment and all ``m``
     PQ codes.  Codes encode the RAW vector (PQ-flat within lists;
     residual encoding is the recall refinement, not a different plan
-    shape).  Scoring is ``_adc_topk`` — the same tail as the persisted
-    ``ivfpq_query_index``, so both answer bit-identically."""
+    shape).  Scoring is ``_adc_topk`` — the same driver-side probe and
+    score kernel as the persisted ``ivfpq_query_index``, so both answer
+    bit-identically."""
     cent, rows = _local_codebook(corpus, id_col, vec_col, n_clusters)
     codes = ivfpq_encode_codes(
         corpus, id_col, vec_col, n_clusters, m, dim, cent=cent
     )
-    probes = _probe_lists(queries, cent, id_col, vec_col, nprobe)
-    return _adc_topk(probes, codes, rows, k, m, dim // m)
+    q = _local_queries(queries, id_col, vec_col, dim)
+    return _adc_topk(q, codes, rows, k, m, probed=_probe_local(q[1], rows, nprobe))
 
 
 def ivfpq_residual_topk_md5(
@@ -684,36 +802,38 @@ def ivfpq_residual_topk_md5(
     Two kernel passes (the residual depends on the coarse choice):
     pass 1 assigns ``cid``; the residual ``x − coarse`` is computed
     JVM-side in doubles with ``coarse`` decoded from ``cid``; pass 2
-    encodes the residual against the same codebook (its own ``cid``
-    — the residual's nearest centroid — is dropped).  All comparisons
-    stay on pinned IEEE doubles under (metric, cid) total orders, so
-    the DuckDB oracle restates them exactly."""
+    encodes the residual against the same codebook and carries the
+    pass-1 ``cid`` through (the residual's own nearest centroid is
+    never computed), so pass 1 runs once.  The score kernel adds the
+    ``dot(q, coarse[cid])`` lead term.  All comparisons stay on pinned
+    IEEE doubles under (metric, cid) total orders, so the DuckDB
+    oracle restates them exactly."""
     cent, rows = _local_codebook(corpus, id_col, vec_col, n_clusters)
     coarse = _literal_vec_map(rows, 0, dim)
-    lists = ivfpq_encode_codes(
-        corpus, id_col, vec_col, n_clusters, m, dim, cent=cent
-    ).select("match_id", "cid")
-    res = lists.join(
-        corpus.select(
-            F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")
-        ),
-        "match_id",
-    ).select(
-        "match_id",
-        F.zip_with(
-            "cvec",
-            F.element_at(coarse, F.col("cid")),
-            lambda x, c: x.cast("double") - c,
-        ).alias("res"),
+    res = (
+        ivfpq_encode_codes(corpus, id_col, vec_col, n_clusters, m, dim, cent=cent)
+        .select("match_id", "cid")
+        .join(
+            corpus.select(
+                F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")
+            ),
+            "match_id",
+        )
+        .select(
+            "match_id",
+            F.zip_with(
+                "cvec",
+                F.element_at(coarse, F.col("cid")),
+                lambda x, c: x.cast("double") - c,
+            ).alias("res"),
+            "cid",
+        )
     )
-    codes = (
-        ivfpq_encode_codes(res, "match_id", "res", n_clusters, m, dim, cent=cent)
-        .drop("cid")
-        .join(lists, "match_id")
+    codes = _encode_kernel(res, rows, m, dim, carry_cid=True)
+    q = _local_queries(queries, id_col, vec_col, dim)
+    return _adc_topk(
+        q, codes, rows, k, m, probed=_probe_local(q[1], rows, nprobe), lead=True
     )
-    probes = _probe_lists(queries, cent, id_col, vec_col, nprobe)
-    lead = _dot(F.col("qvec"), F.element_at(coarse, F.col("cid")))
-    return _adc_topk(probes, codes, rows, k, m, dim // m, lead=lead)
 
 
 def _vector_check(dim, fn):
@@ -788,18 +908,31 @@ def ivfpq_encode_codes(
     driver-locally.  Every vector must be a non-NULL array of exactly
     ``dim`` values — anything else raises a ``ValueError`` naming this
     function and ``dim``."""
-    import numpy as np
-    import pyarrow as pa
-
-    sub = dim // m
     if cent is None:
         cent = _md5_codebook(corpus, id_col, vec_col, n_clusters)
     # control-plane collect: n_clusters rows
     rows = sorted(cent.collect(), key=lambda r: int(r["cid"]))
-    cids = np.array([int(r["cid"]) for r in rows], dtype=np.int64)
-    C = np.array(
-        [[float(v) for v in r["ce"]] for r in rows], dtype=np.float64
+    return _encode_kernel(
+        corpus.select(
+            F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")
+        ),
+        rows,
+        m,
+        dim,
     )
+
+
+def _encode_kernel(frame, rows, m, dim, carry_cid=False):
+    """The ``ivfpq_encode_codes`` kernel over ``frame``'s
+    ``(match_id, cvec)`` columns against cid-sorted codebook ``rows``.
+    With ``carry_cid`` the frame's third column is emitted as ``cid``
+    instead of the coarse assignment (the residual twin's pass 2 keeps
+    its pass-1 list)."""
+    import numpy as np
+    import pyarrow as pa
+
+    sub = dim // m
+    cids, C = _codebook_arrays(rows)
     ncl = C.shape[0]
     # centroid norms, accumulated in the same ascending-i fold order
     # as _norm's aggregate (per-element adds are elementwise over the
@@ -829,22 +962,25 @@ def ivfpq_encode_codes(
             vecs = batch.column(1)
             check(vecs)
             X = np.asarray(vecs.flatten()).astype(np.float64).reshape(n_b, dim)
-            # cosine to every centroid: dot and norm accumulate over
-            # ascending i exactly like the zip_with/aggregate folds
-            dot = np.zeros((n_b, ncl))
-            nx = np.zeros(n_b)
-            for i in range(dim):
-                dot += X[:, i, None] * C[None, :, i]
-                nx += X[:, i] * X[:, i]
-            # a zero vector's 0/0 is NaN exactly as in the JVM; the
-            # NaN → +inf mapping below orders it
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / (np.sqrt(nx)[:, None] * nc[None, :])
-            key = np.where(np.isnan(cos), np.inf, cos)
-            cid_out = cids[key.argmax(axis=1)]
+            if carry_cid:
+                cid_out = batch.column(2).to_numpy(zero_copy_only=False)
+            else:
+                # cosine to every centroid: dot and norm accumulate over
+                # ascending i exactly like the zip_with/aggregate folds
+                dot = np.zeros((n_b, ncl))
+                nx = np.zeros(n_b)
+                for i in range(dim):
+                    dot += X[:, i, None] * C[None, :, i]
+                    nx += X[:, i] * X[:, i]
+                # a zero vector's 0/0 is NaN exactly as in the JVM; the
+                # NaN → +inf mapping below orders it
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = dot / (np.sqrt(nx)[:, None] * nc[None, :])
+                key = np.where(np.isnan(cos), np.inf, cos)
+                cid_out = cids[key.argmax(axis=1)]
             out = {
                 "match_id": ids.astype(np.int64),
-                "cid": cid_out,
+                "cid": cid_out.astype(np.int64),
             }
             for s in range(m):
                 base = s * sub
@@ -859,9 +995,7 @@ def ivfpq_encode_codes(
     cols = ", ".join(
         ["match_id long", "cid long"] + [f"c{s} long" for s in range(m)]
     )
-    return corpus.select(
-        F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")
-    ).mapInArrow(encode, cols)
+    return frame.mapInArrow(encode, cols)
 
 
 def ivfpq_build_index(
@@ -921,60 +1055,41 @@ def ivfpq_query_index(
     nprobe: int = 4,
     m: int = 8,
     dim: int = 64,
-    eager: bool = True,
 ) -> DataFrame:
     """QUERY-MANY half of the IVF-PQ index lifecycle: top-k against an
     index persisted by ``ivfpq_build_index`` — NO corpus scan and no
-    re-encode.  Three control-plane reads plus one pruned codes scan:
+    re-encode.  Two control-plane reads plus one pruned codes scan:
 
-    1. the codebook (``n_clusters`` rows) loads and the query side
-       probes its ``nprobe`` nearest lists against its broadcast —
-       identical probe stage to the inline twins;
-    2. the probed list ids (``|Q|·nprobe`` ints) collect to the driver
-       and become a STATIC partition filter on the codes scan, so the
-       parquet source lists only the probed ``cid=`` directories
-       (plan-visible PartitionFilters, ~nprobe/n_clusters of the
-       index); dynamic pruning would also work, but a static IN-list
-       from a tiny control-plane read is strictly simpler;
-    3. codes decode and score through ``_adc_topk`` — the inline
-       twins' own tail (literal-map decode from the driver-collected
-       codebook, fixed-order ADC chain), so the persisted index
-       answers bit-identically to them and to the DuckDB oracle.
+    1. the codebook (``n_clusters`` rows) and the query vectors
+       collect to the driver, which probes each query's ``nprobe``
+       nearest lists (``_probe_local`` — the inline twins' own probe);
+    2. the probed list ids become a STATIC partition filter on the
+       codes scan, so the parquet source lists only the probed ``cid=``
+       directories (plan-visible PartitionFilters, ~nprobe/n_clusters
+       of the index);
+    3. codes score through ``_adc_topk`` — the inline twins' own tail
+       (the ``ivfpq_score_codes`` kernel, fixed-order ADC chain, one
+       merge), so the persisted index answers bit-identically to them
+       and to the DuckDB oracle.
 
-    At 100 TB: the codes scan reads m+1 small ints per vector from
+    The returned frame is lazy and holds no cached fragment.  At
+    100 TB: the codes scan reads m+1 small ints per vector from
     nprobe/n_clusters of the files; everything corpus-sized stays
     columnar and pruned."""
-    sub = dim // m
-    cent = spark.read.parquet(path + "/codebook")
-    cb_rows = sorted(cent.collect(), key=lambda r: r["cid"])
-    # the probe stage runs ONCE: persisted across the distinct-cid
-    # collect and the final candidate join (without the barrier the
-    # queries×codebook cross join + rank window would execute twice);
-    # unpersisted below after the result is eagerly materialized, so
-    # standalone callers don't leak a cached fragment into the session
-    # (ADVICE r10 — cached fragments substitute into ANY later
-    # matching plan and flip size-based broadcast decisions)
-    probes = _probe_lists(queries, cent, id_col, vec_col, nprobe).persist()
-    probed = sorted(
-        {r["cid"] for r in probes.select("cid").distinct().collect()}
+    cb_rows = sorted(
+        spark.read.parquet(path + "/codebook").collect(), key=lambda r: r["cid"]
     )
+    q = _local_queries(queries, id_col, vec_col, dim)
+    probed = _probe_local(q[1], cb_rows, nprobe)
+    lists = [
+        int(r["cid"]) for r, hit in zip(cb_rows, probed.any(axis=0)) if hit
+    ]
     codes = (
         spark.read.parquet(path + "/codes")
-        .filter(F.col("cid").isin([int(c) for c in probed]))
+        .filter(F.col("cid").isin(lists))
         .withColumn("cid", F.col("cid").cast("long"))
     )
-    # Eagerly materialize the tiny |Q|·k result (localCheckpoint cuts
-    # the lineage WITHOUT registering in the plan-cache manager), then
-    # drop the probe cache — the returned frame reads checkpointed
-    # blocks, so no cached fragment outlives this call.  eager=False
-    # returns the lazy serving plan instead (plan assertions inspect
-    # its PartitionFilters) and leaves the probe cache live — those
-    # callers clear the cache themselves.
-    out = _adc_topk(probes, codes, cb_rows, k, m, sub)
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        probes.unpersist()
-    return out
+    return _adc_topk(q, codes, cb_rows, k, m, probed=probed)
 
 
 def kmeans_fixedpoint_int(

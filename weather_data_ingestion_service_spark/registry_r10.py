@@ -148,7 +148,7 @@ def _ivfpq_query_oracle():
     from .registry_r9 import _ivfpq_md5_oracle
 
     # the round-9 inline IVF-PQ SQL VERBATIM: the lifecycle split
-    # (persisted codes + literal-map decode) must not change a score
+    # (persisted codes + the Arrow score kernel) must not change a score
     return _ivfpq_md5_oracle()
 
 
@@ -156,14 +156,14 @@ def _ivfpq_query_oracle():
 def q_ext_simsearch_index_query(spark, sf_dir):
     """QUERY half of the IVF-PQ index lifecycle: top-3 from the
     PERSISTED index — no corpus scan, no re-encode.  The codebook
-    (16 rows) loads and broadcasts for the probe stage; the probed
-    list ids (|Q|·nprobe ints) become a static partition filter on the
-    codes scan (plan-visible PartitionFilters — tests/test_plans.py
-    pins it); codes decode through driver-built literal lookup maps
-    cid → centroid slice, so the fixed-order ADC chain is
-    bit-identical to the inline twin and the oracle is the round-9
-    IVF-PQ SQL verbatim.  Built lazily if absent (driver order
-    independence); after ``ext_simsearch_index_build`` has run — as in
+    (16 rows) and the 5 query vectors collect to the driver, which
+    runs the probe stage; the probed list ids (|Q|·nprobe ints)
+    become a static partition filter on the codes scan (plan-visible
+    PartitionFilters — tests/test_plans.py pins it); codes score
+    through the ``ivfpq_score_codes`` Arrow kernel, whose fixed-order
+    ADC chain is bit-identical to the inline twin, so the oracle is
+    the round-9 IVF-PQ SQL verbatim.  Built lazily if absent (driver
+    order independence); after ``ext_simsearch_index_build`` has run — as in
     bench.py, where it precedes this entry — the encode is fully
     amortized and this row shows the true per-query serving cost."""
     from .ext.simsearch import ivfpq_query_index
@@ -181,6 +181,9 @@ def q_ext_simsearch_index_query(spark, sf_dir):
         m=8,
     )
     return out.withColumn("adc", F.round("adc", 3))
+
+
+_register_changed_since_green("ext_simsearch_index_query")
 
 
 # =====================================================================
@@ -1644,12 +1647,13 @@ def _index_query_twin_sql():
 
 def _index_compact_stages(spark, sf_dir):
     """The compaction lifecycle split into its three stages —
-    ``(name, thunk)`` pairs run in order; each thunk is EAGER (writes
-    or an eagerly-materialized query), so bench.py can time the stages
-    individually (VERDICT r10 #8: an 8 s multi-stage flow timed as one
-    number hides which stage regressed).  Composing them verbatim IS
+    ``(name, thunk)`` pairs run in order; the write stages are EAGER,
+    so bench.py can time the stages individually (VERDICT r10 #8: an
+    8 s multi-stage flow timed as one number hides which stage
+    regressed).  Composing them verbatim IS
     ``q_ext_simsearch_index_compact``; ``state["out"]`` holds the
-    served result after the last stage."""
+    served result after the last stage — a lazy frame, which bench.py
+    runs inside the serve stage's timing."""
     import os
     import shutil
 
@@ -1721,8 +1725,6 @@ def _index_compact_stages(spark, sf_dir):
         )
 
     def serve_query():
-        # eagerly materialized inside ivfpq_query_index
-        # (localCheckpoint), so this thunk's wall time IS the serve cost
         out = ivfpq_query_index(
             spark,
             f"{root}/serving",
@@ -1764,6 +1766,9 @@ def q_ext_simsearch_index_compact(spark, sf_dir):
     for _name, fn in stages:
         fn()
     return state["out"]
+
+
+_register_changed_since_green("ext_simsearch_index_compact")
 
 
 # Round-10 _register_new_this_round tail (18 ids) removed at round-11

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .io import load_table, local_frame
-from .registry import register
+from .registry import _register_changed_since_green, register
 
 # Round-11 _register_changed_since_green markers deleted at round-12
 # start (wx_history_daily / wx_daily_summary re-certified green in
@@ -530,6 +530,9 @@ def q_ext_simsearch_index_upsert(spark, sf_dir):
     by_name["compact"]()
     by_name["serve"]()
     return state["out"]
+
+
+_register_changed_since_green("ext_simsearch_index_upsert")
 
 
 # =====================================================================
