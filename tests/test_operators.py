@@ -4011,6 +4011,42 @@ class TestKmeansMultiArrow:
             assert (fused[s] == want).all(), f"subspace {s} diverged"
         q256.unpersist()
 
+    def test_trainer_paths_identical(self, spark, sf_dir):
+        """The serving-grade trainer's size switch must be invisible:
+        forcing its distributed branch (``_kmeans_multi_arrow`` for the
+        coarse and the subspace fits) with driver_max_vectors=0 gives
+        the driver branch's codebooks integer for integer."""
+        from pyspark.sql import functions as F
+
+        from weather_data_ingestion_service_spark.ext.simsearch import (
+            _train_refined_codebooks,
+            quantize_embeddings,
+        )
+        from weather_data_ingestion_service_spark.io import load_table
+
+        n_clusters, ksub, m, sub = 8, 16, 4, 16
+        emb = load_table(spark, sf_dir, "embeddings")
+        q256 = quantize_embeddings(emb, "vec_id", "embedding").select(
+            F.col("vec_id").alias("match_id"),
+            F.transform("qvec", lambda x: x.cast("long") * 256).alias("q"),
+        ).persist()
+        try:
+            fits = [
+                _train_refined_codebooks(
+                    spark, q256, n_clusters, ksub, m, sub, m * sub, 3, cap
+                )[:2]
+                for cap in (100_000, 0)
+            ]
+        finally:
+            q256.unpersist()
+        (coarse_d, books_d), (coarse_x, books_x) = fits
+        assert coarse_d.shape == (n_clusters, m * sub)
+        assert (coarse_d == coarse_x).all()
+        assert len(books_d) == len(books_x) == m
+        for s in range(m):
+            assert books_d[s].shape == (ksub, sub)
+            assert (books_d[s] == books_x[s]).all(), f"subspace {s} diverged"
+
 
 # --- JVM reference for the ADC score kernel: the Spark probe + window,
 # --- literal-map decode and higher-order ADC chain the md5 PQ family
@@ -4036,9 +4072,21 @@ def _ref_probe_lists(queries, cent, nprobe):
     )
 
 
+def _adc_subspace_dot(s, sub):
+    """One fixed-order ADC term: dot(q slice s, selected code slice)."""
+    return F.aggregate(
+        F.zip_with(
+            F.slice("qvec", s * sub + 1, sub),
+            F.col(f"cv{s}"),
+            lambda x, c: x.cast("double") * c.cast("double"),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def _ref_adc_topk(probes, codes, cb_rows, k, m, sub, on="cid", lead=False):
     from weather_data_ingestion_service_spark.ext.simsearch import (
-        _adc_subspace_dot,
         _dot,
         _literal_vec_map,
         _rank_topk,
@@ -4064,6 +4112,41 @@ def _ref_adc_topk(probes, codes, cb_rows, k, m, sub, on="cid", lead=False):
         adc = adc + t
     scored = cand.filter(F.col("query_id") != F.col("match_id")).withColumn("adc", adc)
     return _rank_topk(scored, "adc", k)
+
+
+def test_ivf_md5_rerank_zero_vectors_under_ansi(spark, sf_dir):
+    """Zero-norm vectors in the corpus and the queries: the
+    ``ivf_topk_md5`` cosine re-rank gives NULL (try_divide) under the
+    session's ANSI mode — the same rows as non-ANSI ``/``, where it
+    used to raise DIVIDE_BY_ZERO."""
+    from weather_data_ingestion_service_spark.ext.simsearch import ivf_topk_md5
+    from weather_data_ingestion_service_spark.io import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    zeros = emb.filter(F.col("vec_id") < 2).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.array_repeat(F.lit(0.0).cast("float"), 64).alias("embedding"),
+    )
+    corpus = emb.unionByName(zeros)
+    queries = emb.filter(F.col("vec_id") < 3).unionByName(zeros)
+
+    def rows():
+        out = ivf_topk_md5(corpus, queries, k=3)
+        return sorted(
+            (r.query_id, r.match_id, None if r.cosine is None else r.cosine.hex(), r.rank)
+            for r in out.collect()
+        )
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    got = rows()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = rows()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    assert got == want and len(got) == 15
+    # the zero queries really score NULL cosines
+    assert any(c is None for q, _m, c, _r in got if q >= 1_000_000)
 
 
 class TestAdcScoreKernel:
@@ -4142,31 +4225,23 @@ class TestAdcScoreKernel:
         got = self._bits(
             simsearch._adc_topk(q, codes, cb_rows, k, self.M, probed=probed, lead=lead)
         )
-        # ANSI division raises on the zero queries' 0/0 cosine (the mode
-        # is fixed when a frame is built); without ANSI it is NULL, and
-        # an all-NULL row ranks by cid alone, like the kernel's all-NaN row
-        ansi = spark.conf.get("spark.sql.ansi.enabled")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        try:
-            if nprobe is None:
-                probes = queries.select(
-                    F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-                )
-                on = None
-            else:
-                probes = _ref_probe_lists(queries, cent, nprobe)
-                on = "cid"
-                cids = [r["cid"] for r in cb_rows]
-                assert sorted(
-                    (int(qid), cids[j]) for qid, row in zip(q[0], probed) for j in row.nonzero()[0]
-                ) == sorted((r.query_id, r.cid) for r in probes.collect())
-            want = self._bits(
-                _ref_adc_topk(
-                    probes, codes, cb_rows, k, self.M, self.DIM // self.M, on=on, lead=lead
-                )
+        if nprobe is None:
+            probes = queries.select(
+                F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
             )
-        finally:
-            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            on = None
+        else:
+            probes = _ref_probe_lists(queries, cent, nprobe)
+            on = "cid"
+            cids = [r["cid"] for r in cb_rows]
+            assert sorted(
+                (int(qid), cids[j]) for qid, row in zip(q[0], probed) for j in row.nonzero()[0]
+            ) == sorted((r.query_id, r.cid) for r in probes.collect())
+        want = self._bits(
+            _ref_adc_topk(
+                probes, codes, cb_rows, k, self.M, self.DIM // self.M, on=on, lead=lead
+            )
+        )
         assert got == want
         # the adversarial cases are really in the answer
         assert any(a == "nan" for _q, _m, a, _r in want)

@@ -413,19 +413,22 @@ def test_nearest_gridpoint_partial_aggregates(spark, sf_dir):
 
 def test_md5_ann_encode_is_one_arrow_kernel(spark, sf_dir):
     """The IVF/PQ md5 twins (and the round-9 compositions, IVF-PQ and
-    residual IVF-PQ) encode through the closure-codebook Arrow kernel
-    ``ivfpq_encode_codes``: the plan must contain its MapInArrow and
-    no min_by/max_by encode aggregate — a per-vector aggregate over a
-    codebook cross join would be the wrong plan at any scale."""
+    residual IVF-PQ) and the trained shared-codebook PQ encode through
+    the closure-codebook Arrow kernel ``ivfpq_encode_codes``: the plan
+    must contain its MapInArrow, no min_by/max_by encode aggregate and
+    no nested-loop join — a per-vector aggregate over a codebook cross
+    join would be the wrong plan at any scale."""
     for name in (
         "ext_simsearch_ivf_md5",
         "ext_simsearch_pq_md5",
         "ext_simsearch_ivfpq",
         "ext_simsearch_ivfpq_residual",
+        "ext_simsearch_pq_kmeans",
     ):
         plan = formatted_plan(QS[name](spark, sf_dir))
         assert "MapInArrow" in plan, name
         assert "min_by" not in plan and "max_by" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_interleave_broadcasts_source_dim(spark, sf_dir):

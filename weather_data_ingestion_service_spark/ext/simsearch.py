@@ -96,36 +96,6 @@ def cosine_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
-    threshold) — brute-force all-pairs; at scale swap the crossJoin
-    for ``srp_buckets`` candidate generation (same re-score)."""
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine", _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def srp_buckets(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -404,13 +374,15 @@ def pq_topk_trained(
     codebook — ``cent8`` is (cid, ce) rows of dim/m-dim centroid
     vectors (e.g. the certified fixed-point KMeans fit over the
     subvector table), instead of ``pq_topk_md5``'s hash-sampled
-    full-vector slices.  Encoding picks, per (vector, subspace), the
-    codebook entry minimizing exact squared L2 under the (l2, cid)
-    total order — one ``min_by`` hash aggregate per subspace in a
-    single broadcast-codebook corpus pass; ADC is the fixed-order
-    chain of per-subspace dots (the r9 discipline).  Same scale shape
-    as the md5 twin: codes are m small ints per vector at rest, the
-    codebook broadcasts.
+    full-vector slices.  It runs on the md5 family's shared kernels:
+    the dim/m-wide codebook is tiled m times into the dim-wide row form
+    (slice s of every entry IS the shared entry), so the
+    ``ivfpq_encode_codes`` kernel picks, per (vector, subspace), the
+    entry minimizing exact squared L2 under the (l2, cid) total order,
+    and ``_adc_topk`` scores every code with the fixed-order ADC chain
+    (the r9 discipline).  Same scale shape as the md5 twin: codes are
+    m small ints per vector at rest, the codebook and the collected
+    queries ride in the kernel closures.
 
     The WHOLE path runs in the quantized domain: corpus AND query
     vectors go through the per-full-vector int8 quantization lifted
@@ -422,51 +394,17 @@ def pq_topk_trained(
     codebook scores like a real PQ fit.  A query's quantization
     scale is a per-query positive constant, so it cannot change that
     query's ADC ranking."""
-    sub = dim // m
-
-    def _q256(df, out_id, out_vec):
-        return quantize_embeddings(df, id_col, vec_col).select(
-            F.col(id_col).alias(out_id),
-            F.transform(
-                "qvec", lambda x: (x.cast("long") * 256).cast("double")
-            ).alias(out_vec),
-        )
-
-    def _l2(s):
-        return F.aggregate(
-            F.zip_with(
-                F.slice("cvec", s * sub + 1, sub),
-                F.col("ce"),
-                lambda x, c: (x - c) * (x - c),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    enc = (
-        _q256(corpus, "match_id", "cvec")
-        .crossJoin(F.broadcast(cent8))
-        .groupBy("match_id")
-        .agg(
-            *[
-                F.min_by(
-                    "ce", F.struct(_l2(s).alias("l2"), F.col("cid").alias("cid"))
-                ).alias(f"cv{s}")
-                for s in range(m)
-            ]
-        )
+    rows = [
+        {"cid": int(r["cid"]), "ce": list(r["ce"]) * m}
+        for r in sorted(cent8.collect(), key=lambda r: int(r["cid"]))
+    ]
+    # both sides on the ×256 grid (_quantize_queries' (id, qv) columns)
+    corpus256 = _quantize_queries(corpus, id_col, vec_col).select("query_id", "qv")
+    codes = _encode_kernel(corpus256, rows, m, dim)
+    q = _local_queries(
+        _quantize_queries(queries, id_col, vec_col), "query_id", "qv", dim
     )
-    q = _q256(queries, "query_id", "qvec")
-    adc = _adc_subspace_dot(0, sub)
-    for s in range(1, m):
-        adc = adc + _adc_subspace_dot(s, sub)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(enc)
-        .filter(F.col("query_id") != F.col("match_id"))
-        .withColumn("adc", adc)
-    )
-    return _rank_topk(scored, "adc", k)
+    return _adc_topk(q, codes, rows, k, m)
 
 
 def _md5_codebook(corpus, id_col, vec_col, n):
@@ -501,7 +439,11 @@ def _local_codebook(corpus, id_col, vec_col, n, cent=None):
 
 
 def _codebook_cos(a, b):
-    return _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
+    """JVM cosine; a zero-norm side gives NULL (``try_divide``: the
+    value of non-ANSI ``/`` and of DuckDB's ``/``) under any ANSI mode."""
+    return F.try_divide(
+        _dot(F.col(a), F.col(b)), _norm(F.col(a)) * _norm(F.col(b))
+    )
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -534,19 +476,6 @@ def _lit_double_sql(v) -> str:
     if f != f or f in (float("inf"), float("-inf")):
         raise ValueError(f"non-finite literal: {v!r}")
     return repr(f) + "D"
-
-
-def _adc_subspace_dot(s, sub):
-    """One fixed-order ADC term: dot(q slice s, selected code slice)."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice("qvec", s * sub + 1, sub),
-            F.col(f"cv{s}"),
-            lambda x, c: x.cast("double") * c.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def _rank_topk(scored, score_col, k):
@@ -1098,7 +1027,6 @@ def kmeans_fixedpoint_int(
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 3,
-    scale: int = 256,
     dim: int = 64,
     driver_max_vectors: int = 100_000,
     pre_scaled: bool = False,
@@ -1106,12 +1034,12 @@ def kmeans_fixedpoint_int(
     """Lloyd's KMeans with EXACT INTEGER state — the quality-path
     clustering machinery, made engine-restatable: vectors are the
     int8-quantized corpus (``quantize_embeddings``, the proven
-    bit-reproducible path) lifted to fixed point (``q·scale``);
+    bit-reproducible path) lifted to the ×256 fixed-point grid;
     centroids live on the same integer grid, so ASSIGNMENT is a plain
     integer L2 argmin under the (distance, cid) total order (a
     sortable key — no rational cross-multiplication needed) and the
-    UPDATE is the floor fixed-point mean ``floor(Σ q·scale / n)``.
-    The floor always happens in CPython ``//`` (even on the
+    UPDATE is the floor fixed-point mean ``floor(Σ q·256 / n)``.
+    The floor always happens in numpy/CPython ``//`` (even on the
     distributed path the per-round collect is k rows of component
     sums — control-plane), so the negative-sum floor-vs-truncate
     hazard (Spark DIV truncates toward zero) never enters; the DuckDB
@@ -1119,21 +1047,21 @@ def kmeans_fixedpoint_int(
     empty cluster keeps its previous centroid.  The result is a PURE FUNCTION of (corpus, k, n_iter) —
     identical across engines, partitionings and batch shapes, which
     float KMeans structurally is not (its mean is an order-dependent
-    float sum); the 1/scale centroid resolution is the deliberate,
+    float sum); the 1/256 centroid resolution is the deliberate,
     negligible trade (quantized inputs are already on a 1/127 grid).
 
     Size-adaptive (the pagerank_int / dedup_clusters rule): at or
-    under ``driver_max_vectors`` the loop runs on the driver over the
-    collected quantized vectors — bit-identical by integer
-    determinism — and above it each round is one broadcast-centroid
-    pass + one hash aggregate of 64 map-side-combining sums per
-    cluster (no explode, no window over the corpus).
+    under ``driver_max_vectors`` the loop is ``_kmeans_int_np`` over
+    the collected quantized vectors, above it ``_kmeans_multi_arrow``
+    with one subspace (one narrow Arrow partial-sum pass per round) —
+    the same two loops the serving-grade trainer runs, bit-identical
+    by integer determinism.
 
     Returns ``(cid, dim, c_fix)`` — one row per centroid component on
     the fixed-point grid (idx-column publication per the repo's
     scalar-columns rule).
 
-    Magnitudes: |q·scale| ≤ 127·256 = 32512 ⇒ per-dim squared diff ≤
+    Magnitudes: |q·256| ≤ 127·256 = 32512 ⇒ per-dim squared diff ≤
     4.3e9, distance ≤ 2.8e11; component sums ≤ n·32512 — int64 holds
     exact state past 10¹⁴ vectors.
 
@@ -1142,166 +1070,38 @@ def kmeans_fixedpoint_int(
     slices — the PQ training set, where re-quantizing each slice by
     its OWN max would destroy the cross-subspace scale and collapse
     downstream ADC recall: measured 0.007 vs 0.167)."""
+    import numpy as np
+
+    from ..io import local_frame
+
     if pre_scaled:
         q = corpus.select(
-            F.col(id_col).alias("vid"),
+            F.col(id_col).alias("match_id"),
             F.transform(vec_col, lambda x: x.cast("long")).alias("q"),
         )
     else:
         q = quantize_embeddings(corpus, id_col, vec_col).select(
-            F.col(id_col).alias("vid"),
-            F.transform("qvec", lambda x: x.cast("long") * scale).alias("q"),
+            F.col(id_col).alias("match_id"),
+            F.transform("qvec", lambda x: x.cast("long") * 256).alias("q"),
         )
-    # persist BEFORE the init join so the quantize projection runs
-    # once and warms the same cache every later pass reads (round-10
-    # review: persisting after init cost an extra full corpus pass
-    # per invocation)
+    # the size probe, the collect and every distributed round read
+    # the quantize projection once
     q.persist()
-    # init: the md5-ranked first k vectors' fixed-point forms (the
-    # _md5_codebook sampling convention)
-    init = (
-        corpus.select(
-            F.col(id_col).alias("vid"),
-            F.md5(F.col(id_col).cast("string").cast("binary")).alias("h"),
-        )
-        .orderBy("h", "vid")
-        .limit(k)
-    )
-    cent_rows = (
-        init.join(q, "vid")
-        .select("h", "vid", "q")
-        .orderBy("h", "vid")
-        .collect()
-    )
-    cents = [[int(v) for v in r["q"]] for r in cent_rows]  # cid = rank
-    spark = corpus.sparkSession
-
     try:
-        n_vec = q.limit(driver_max_vectors + 1).count()
-        if n_vec <= driver_max_vectors:
-            # numpy int64 path — EXACT integer arithmetic, so the
-            # result is bit-identical to the original pure-Python loop
-            # (squared distances ≤ dim·(2·32512)² ≈ 2.7e11 and
-            # component sums ≤ n·32512 both sit far inside int64;
-            # np.argmin's first-minimum rule IS the (distance, cid)
-            # tie-break; int64 // floors like CPython).  Vectorizing
-            # matters because serving-grade codebooks train 1 + m
-            # KMeans per index (coarse + per-subspace) — the pure
-            # loop at k=256 was ~100M Python ops per fit.
-            import numpy as np
-
-            vecs = np.array(
-                [[int(v) for v in r["q"]] for r in q.collect()],
-                dtype=np.int64,
-            )
-            carr = np.array(cents, dtype=np.int64)
-            x2 = (vecs * vecs).sum(axis=1)
-            for _ in range(n_iter):
-                # ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖² via int64 matmul — every
-                # term exact (max ≈ dim·32512² ≈ 6.8e10), and the n×k
-                # matrix is the only temp (0.2 GB at the 100k cap /
-                # k=256, vs 13 GB for the naive broadcast difference)
-                c2 = (carr * carr).sum(axis=1)
-                d = x2[:, None] - 2 * (vecs @ carr.T) + c2[None, :]
-                assign = d.argmin(axis=1)
-                for j in range(k):
-                    mask = assign == j
-                    nj = int(mask.sum())
-                    if nj > 0:
-                        carr[j] = vecs[mask].sum(axis=0) // nj
-            cents = [[int(v) for v in row] for row in carr]
+        if q.limit(driver_max_vectors + 1).count() <= driver_max_vectors:
+            tbl = q.toArrow()
+            ids = np.asarray(tbl.column("match_id").to_numpy(), dtype=np.int64)
+            X = np.asarray(
+                tbl.column("q").combine_chunks().flatten(), dtype=np.int64
+            ).reshape(len(ids), dim)
+            cents = _kmeans_int_np(X, ids, k, n_iter)
         else:
-            # distributed round = ONE narrow Arrow pass per iteration:
-            # each batch assigns its vectors against the
-            # closure-shipped centroids (exact-int64 numpy matmul —
-            # argmin's first-minimum rule IS the (distance, cid)
-            # tie-break) and emits per-cluster PARTIAL component sums
-            # (k·dim long-form rows per batch), which one k·dim-row
-            # hash aggregate folds — int64 addition is associative, so
-            # the fold is batch-shape-independent and bit-identical to
-            # the broadcast-join + min_by formulation it replaced
-            # (which paid n·k zip_with lambda evals per round: the
-            # 128k-vector ksub=256 fit measured ~10 s/subspace).
-            # The floor mean stays driver-side CPython `//`.
-            import numpy as np
-            import pyarrow as pa
-
-            part_schema = pa.schema(
-                [
-                    pa.field("cid", pa.int64()),
-                    pa.field("d", pa.int64()),
-                    pa.field("s", pa.int64()),
-                    pa.field("n", pa.int64()),
-                ]
-            )
-
-            for _ in range(n_iter):
-                carr = np.array(cents, dtype=np.int64)
-                c2 = (carr * carr).sum(axis=1)
-                kk, dd = k, dim
-
-                def assign_partials(batches, carr=carr, c2=c2):
-                    for batch in batches:
-                        n_b = batch.num_rows
-                        if n_b == 0:
-                            yield pa.RecordBatch.from_pydict(
-                                {f.name: [] for f in part_schema},
-                                schema=part_schema,
-                            )
-                            continue
-                        X = np.asarray(
-                            batch.column("q").flatten(), dtype=np.int64
-                        ).reshape(n_b, dd)
-                        x2 = (X * X).sum(axis=1)
-                        dist = x2[:, None] - 2 * (X @ carr.T) + c2[None, :]
-                        a = dist.argmin(axis=1)
-                        sums = np.zeros((kk, dd), dtype=np.int64)
-                        np.add.at(sums, a, X)
-                        cnt = np.bincount(a, minlength=kk).astype(np.int64)
-                        nz = np.nonzero(cnt)[0]
-                        yield pa.RecordBatch.from_pydict(
-                            {
-                                "cid": np.repeat(nz, dd),
-                                "d": np.tile(
-                                    np.arange(dd, dtype=np.int64), len(nz)
-                                ),
-                                "s": sums[nz].reshape(-1),
-                                "n": np.repeat(cnt[nz], dd),
-                            },
-                            schema=part_schema,
-                        )
-
-                upd = (
-                    q.select("q")
-                    .mapInArrow(
-                        assign_partials, "cid long, d long, s long, n long"
-                    )
-                    .groupBy("cid", "d")
-                    .agg(
-                        F.sum("s").cast("long").alias("s"),
-                        F.sum("n").cast("long").alias("n"),
-                    )
-                )
-                acc: dict[int, tuple[list[int], int]] = {}
-                for r in upd.collect():
-                    j = int(r["cid"])
-                    if j not in acc:
-                        acc[j] = ([0] * dim, 0)
-                    acc[j][0][int(r["d"])] = int(r["s"])
-                    acc[j] = (acc[j][0], int(r["n"]))
-                cents = [
-                    [acc[j][0][t] // acc[j][1] for t in range(dim)]
-                    if j in acc and acc[j][1] > 0
-                    else cents[j]
-                    for j in range(k)
-                ]
+            cents = _kmeans_multi_arrow(q, k, 1, dim, n_iter)[0]
     finally:
         q.unpersist()
-    from ..io import local_frame
-
     return local_frame(
-        spark,
-        [(j, t, cents[j][t]) for j in range(k) for t in range(dim)],
+        corpus.sparkSession,
+        [(j, t, int(cents[j][t])) for j in range(len(cents)) for t in range(dim)],
         "cid long, dim long, c_fix long",
     )
 
@@ -1463,77 +1263,6 @@ def ivf_topk(
     )
 
 
-def embedding_near_dup_pairs_blas(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    max_broadcast_corpus: int = 200_000,
-) -> DataFrame:
-    """BLAS-blocked exact all-pairs cosine near-dup (same output as
-    ``embedding_near_dup_pairs``).
-
-    Each partition's block of vectors multiplies against the full
-    corpus (broadcast as one numpy matrix) in a single matmul per
-    Arrow batch — dense linear algebra belongs in BLAS, not expression
-    folds (~10× on 64-dim vectors).  cosine values may differ from the
-    sequential fold in the last ~1 ulp (pairwise vs sequential
-    summation); thresholding and 3-decimal rounding are unaffected.
-
-    Scale guard: this kernel collects + broadcasts the corpus, so it
-    fails loudly past ``max_broadcast_corpus`` rows (capped
-    ``limit(bound+1).count()``, like ``cosine_topk``) instead of
-    silently OOMing the driver — use ``embedding_near_dup_pairs_grid``
-    (block-pair grid, no collect/broadcast; the registry's choice) at
-    corpus scale.  The per-block matmul kernel is identical.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    over = corpus.limit(max_broadcast_corpus + 1).count()
-    if over > max_broadcast_corpus:
-        raise ValueError(
-            f"embedding_near_dup_pairs_blas collects and broadcasts the "
-            f"corpus; got > {max_broadcast_corpus} rows. Use "
-            f"embedding_near_dup_pairs_grid at corpus scale, or raise "
-            f"max_broadcast_corpus if the driver/executors are sized "
-            f"for it."
-        )
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.asarray([r[1] for r in rows], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def block(batches):
-        cids, cmat, cnorms = b_ids.value, b_mat.value, b_norms.value
-        for pdf in batches:
-            q = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            qids = pdf[id_col].to_numpy(dtype=np.int64)
-            qnorms = np.sqrt((q * q).sum(axis=1))
-            cos = (q @ cmat.T) / np.outer(qnorms, cnorms)
-            qi, ci = np.nonzero(cos >= threshold)
-            ida, idb = qids[qi], cids[ci]
-            keep = ida < idb  # emit each pair once
-            yield pd.DataFrame(
-                {"id_a": ida[keep], "id_b": idb[keep], "cosine": cos[qi, ci][keep]}
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(block, out_schema)
-
-
 def embedding_near_dup_pairs_grid(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -1541,9 +1270,9 @@ def embedding_near_dup_pairs_grid(
     threshold: float = 0.95,
     n_blocks: int = 8,
 ) -> DataFrame:
-    """Distributed exact all-pairs cosine near-dup via a block-pair
-    grid — same output as ``embedding_near_dup_pairs`` with NO driver
-    collect and NO full-corpus broadcast.
+    """Distributed exact all-pairs cosine near-dup pairs (id_a < id_b,
+    cosine ≥ threshold) via a block-pair grid — NO driver collect and
+    NO full-corpus broadcast.
 
     Every vector is hash-assigned to one of ``n_blocks`` blocks; the
     grid of unordered block pairs (ba ≤ bb) is the unit of work.  A
@@ -1557,11 +1286,10 @@ def embedding_near_dup_pairs_grid(
     Total flops stay O(N²·d) (it is the exact semantic; ``srp_buckets``
     / ``minhash`` are the sub-quadratic approximate paths), but work is
     spread over B·(B+1)/2 independent tasks and shuffle volume is B·N
-    rows.  The per-pair kernel is the same numpy matmul as
-    ``embedding_near_dup_pairs_blas``; cosines agree to ~1 ulp (BLAS
+    rows.  The per-group kernel is one numpy matmul; cosines agree with
+    a whole-corpus ``(A @ A.T) / outer(norms)`` to ~1 ulp (BLAS
     summation order varies with matrix shape), which 3-decimal rounding
-    and thresholding absorb — same tolerance already accepted for the
-    blas-vs-expression-fold pairing.
+    and thresholding absorb.
     """
     import numpy as np
     import pandas as pd
@@ -2527,14 +2255,16 @@ def gram_matrix_quantized(
 
 
 def _kmeans_int_np(vecs, ids, k: int, n_iter: int = 3):
-    """Driver-side fixed-point Lloyd's — the EXACT integer algorithm
-    of ``kmeans_fixedpoint_int`` on numpy int64 (init = the k vectors
-    ranked first under ``(md5(str(id)), id)``; assignment argmin under
-    (distance, cid); update = floor mean; empty cluster keeps its
-    centroid).  Shared by the serving-grade trainer below so 1 + m
-    codebooks fit from ONE collected corpus instead of m + 1 Spark
-    round-trips; distances use the ‖x‖²−2x·c+‖c‖² int64-matmul
-    expansion (exact — max term ≈ dim·32512² ≈ 6.8e10)."""
+    """Driver-side fixed-point Lloyd's on numpy int64 — the one driver
+    loop of the integer KMeans (``kmeans_fixedpoint_int`` at or under
+    its size cap, and the serving-grade trainer below, which fits
+    1 + m codebooks from ONE collected corpus instead of m + 1 Spark
+    round-trips).  Init = the k vectors ranked first under
+    ``(md5(str(id)), id)``; assignment argmin under (distance, cid)
+    (``np.argmin``'s first-minimum rule); update = floor mean (int64
+    ``//`` floors like CPython); an empty cluster keeps its centroid.
+    Distances use the ‖x‖²−2x·c+‖c‖² int64-matmul expansion (exact —
+    max term ≈ dim·32512² ≈ 6.8e10; the n×k matrix is the only temp)."""
     import hashlib
 
     import numpy as np
@@ -2578,9 +2308,6 @@ def _dot_int(a, b):
 def _train_refined_codebooks(
     spark,
     q256,
-    corpus,
-    id_col: str,
-    vec_col: str,
     n_clusters: int,
     ksub: int,
     m: int,
@@ -2592,13 +2319,15 @@ def _train_refined_codebooks(
     """TRAIN stage of the serving-grade path, shared by the inline
     query (``ivfpq_refine_topk``) and the index build
     (``ivfpq_refined_build_index``): coarse quantizer + m per-subspace
-    PQ codebooks, all via the certified fixed-point integer KMeans.
-    Size-adaptive (the dedup_clusters / pagerank_int rule): at or
-    under ``driver_max_vectors`` all 1+m fits run on ONE collected
-    copy of the quantized corpus via ``_kmeans_int_np``; above it each
-    fit is a ``kmeans_fixedpoint_int`` distributed loop.  Both paths
-    are bit-identical by integer determinism.  Returns the two
-    control-plane codebook frames (n_clusters rows; m·ksub rows).
+    PQ codebooks, all via the certified fixed-point integer KMeans
+    over ``q256``'s ``(match_id, q)``.  Size-adaptive (the
+    dedup_clusters / pagerank_int rule): at or under
+    ``driver_max_vectors`` all 1+m fits run on ONE collected copy of
+    the quantized corpus via ``_kmeans_int_np``; above it the coarse
+    fit and the fused m-subspace fit are ``_kmeans_multi_arrow``
+    loops.  Both paths are bit-identical by integer determinism.
+    Returns the numpy codebooks and the two control-plane codebook
+    frames (n_clusters rows; m·ksub rows).
 
     Do NOT raise ``driver_max_vectors`` past its ~100k design point:
     numpy int64 matmuls have no BLAS path, so the collected fit
@@ -2622,15 +2351,9 @@ def _train_refined_codebooks(
             for s in range(m)
         ]
     else:
-        co = kmeans_fixedpoint_int(
-            corpus, id_col, vec_col, k=n_clusters, n_iter=n_iter, dim=dim,
-            driver_max_vectors=driver_max_vectors,
-        ).collect()
-        coarse_np = np.zeros((n_clusters, dim), dtype=np.int64)
-        for r in co:
-            coarse_np[int(r["cid"]), int(r["dim"])] = int(r["c_fix"])
+        coarse_np = _kmeans_multi_arrow(q256, n_clusters, 1, dim, n_iter)[0]
         # all m subspace fits fused into one Arrow pass per round —
-        # bit-identical to m separate kmeans_fixedpoint_int calls
+        # bit-identical to m separate single-subspace fits
         # (pytest-pinned), 3 jobs instead of 3·m
         books_np = _kmeans_multi_arrow(q256, ksub, m, sub, n_iter)
 
@@ -2659,18 +2382,21 @@ def _train_refined_codebooks(
 
 
 def _kmeans_multi_arrow(q256, ksub: int, m: int, sub: int, n_iter: int):
-    """ALL m per-subspace codebooks trained with ONE narrow Arrow pass
-    per Lloyd round (the distributed scale path of
-    ``_train_refined_codebooks``): each batch assigns every vector's m
-    slices against the closure-shipped codebook stack (m·ksub·sub
-    int64s ≈ 130 KB) and emits per-(subspace, cluster) PARTIAL
-    component sums; one m·ksub·sub-row hash aggregate folds them and
-    the floor mean runs driver-side.  Bit-identical to m separate
-    ``kmeans_fixedpoint_int`` fits — same md5-ranked init (the slices
-    of the same first-ksub vectors), same integer argmin tie-break,
-    and int64 partial sums fold associatively — but 3 jobs instead of
-    3·m (the 128k-vector probe measured the per-job scheduling floor
-    dominating the split formulation)."""
+    """The one distributed loop of the integer KMeans: ALL m
+    per-subspace codebooks over ``q256``'s ``(match_id, q)`` trained
+    with ONE narrow Arrow pass per Lloyd round (``m=1, sub=dim`` is
+    the full-vector fit of ``kmeans_fixedpoint_int`` above its size
+    cap and of the serving-grade coarse quantizer).  Each batch
+    assigns every vector's m slices against the closure-shipped
+    codebook stack (m·ksub·sub int64s ≈ 130 KB) and emits
+    per-(subspace, cluster) PARTIAL component sums; one
+    m·ksub·sub-row hash aggregate folds them and the floor mean runs
+    driver-side.  Bit-identical to ``_kmeans_int_np`` on each slice —
+    same md5-ranked init (the slices of the same first-ksub vectors),
+    same integer argmin tie-break, and int64 partial sums fold
+    associatively — but 3 jobs instead of 3·m (the 128k-vector probe
+    measured the per-job scheduling floor dominating the split
+    formulation)."""
     import numpy as np
     import pyarrow as pa
 
@@ -3046,8 +2772,7 @@ def ivfpq_refine_topk(
     q256.persist()
 
     coarse_np, books_np, coarse_df, books_df = _train_refined_codebooks(
-        spark, q256, corpus, id_col, vec_col,
-        n_clusters, ksub, m, sub, dim, n_iter, driver_max_vectors,
+        spark, q256, n_clusters, ksub, m, sub, dim, n_iter, driver_max_vectors,
     )
     codes_cid = _long_codes(
         _encode_refined_wide(q256, coarse_np, books_np, m, sub)
@@ -3160,8 +2885,7 @@ def ivfpq_refined_build_stages(
         q256.persist()
         state["q256"] = q256
         coarse_np, books_np, coarse_df, books_df = _train_refined_codebooks(
-            spark, q256, corpus, id_col, vec_col,
-            n_clusters, ksub, m, sub, dim, n_iter, driver_max_vectors,
+            spark, q256, n_clusters, ksub, m, sub, dim, n_iter, driver_max_vectors,
         )
         state["coarse_np"], state["books_np"] = coarse_np, books_np
         coarse_df.coalesce(1).write.mode("overwrite").parquet(

@@ -1326,10 +1326,10 @@ def q_ext_embed_kmeans_exact(spark, sf_dir):
     iters) that the DuckDB oracle replays round-for-round in a WITH
     RECURSIVE (position rows collapsed per (cluster, dim) each round —
     the BPE-oracle lesson).  k=8, 3 rounds here; the engine is
-    size-adaptive (driver loop ≤100k vectors, else broadcast-centroid
-    passes with 64 map-side-combining component sums — no explode, no
-    corpus window), and the two paths are pinned bit-identical in
-    pytest.  The float KMeans quality paths (`ext_simsearch_ivf`/`_pq`)
+    size-adaptive (driver loop ≤100k vectors, else one narrow Arrow
+    partial-sum pass per round — no explode, no corpus window; the
+    same two loops the serving-grade trainer runs), and the two paths
+    are pinned bit-identical in pytest.  The float KMeans quality paths (`ext_simsearch_ivf`/`_pq`)
     remain as-is; this certifies the MACHINERY their codebooks come
     from."""
     from .ext.simsearch import kmeans_fixedpoint_int
@@ -1338,6 +1338,9 @@ def q_ext_embed_kmeans_exact(spark, sf_dir):
     return kmeans_fixedpoint_int(emb, "vec_id", "embedding").orderBy(
         "cid", "dim"
     )
+
+
+_register_changed_since_green("ext_embed_kmeans_exact")
 
 
 def _ivf_kmeans_oracle(k_clusters=8, t=3, nprobe=3, topk=3):
@@ -1389,8 +1392,8 @@ def q_ext_simsearch_ivf_kmeans(spark, sf_dir):
     oracle-paired end to end (until now only the deliberately
     degenerate md5-sampled codebooks were restatable; real recall
     comes from trained codebooks, and this entry hash-verifies the
-    full trained-codebook flow: 3 Lloyd rounds → centroid broadcast →
-    assignment → nprobe=3 probing → exact cosine re-rank, every
+    full trained-codebook flow: 3 Lloyd rounds → centroids in the
+    encode kernel's closure → assignment → nprobe=3 probing → exact cosine re-rank, every
     comparison reproduced by DuckDB from the composed WITH RECURSIVE
     replay).  Same IVF machinery as `ext_simsearch_ivf_md5` via the
     shared `ivf_topk_md5` core with the injected quantizer; the float
@@ -1496,8 +1499,9 @@ def q_ext_simsearch_pq_kmeans(spark, sf_dir):
     (`ext_simsearch_ivf_kmeans` is the IVF half): the codebook is the
     certified fixed-point KMeans fit over the n·m SUBVECTOR table
     (every vector's m dim-8 slices as training points — exactly how
-    shared PQ codebooks are trained), then min_by subspace encoding
-    and the fixed-order ADC chain.  The oracle composes the KMeans
+    shared PQ codebooks are trained), then the md5 family's shared
+    encode kernel and fixed-order ADC score kernel over the codebook
+    tiled to full width.  The oracle composes the KMeans
     WITH RECURSIVE replay (over the subvector CTE, dim=8) into the r9
     PQ SQL shape, so training, encoding and scoring are all
     hash-checked on one pass.  Until this round trained codebooks were
@@ -1555,6 +1559,9 @@ def q_ext_simsearch_pq_kmeans(spark, sf_dir):
         m=8,
     )
     return out.withColumn("adc", F.round("adc", 3))
+
+
+_register_changed_since_green("ext_simsearch_pq_kmeans")
 
 
 # =====================================================================
